@@ -169,7 +169,7 @@ object DedupOps {
 
   /** [[polySig61]] applied to every element of a string array in ONE
     * codegen pass — bit-identical to `transform(toks, polySig61)`
-    * (parity: SimhashKernelSpec; the HOF form splits each token into
+    * (parity: MinhashExprsSpec; the HOF form splits each token into
     * per-char strings and folds them interpreted).
     */
   def poly61SigArray(tokens: Column): Column =
@@ -529,7 +529,7 @@ case class SimHashDedupPipe(
         // three exchanges of the exploded token stream. With the hash
         // codegen'd, hashing per OCCURRENCE is cheaper than shuffling
         // the occurrences (r20 A/B; votes are per occurrence in both
-        // forms, so signatures are bit-identical — SimhashParitySpec).
+        // forms, so signatures are bit-identical — MinhashExprsSpec).
         df.select(qcol(idCol).cast("long").as("id"),
           DedupOps.simhash64Fold(DedupOps.poly61SigArray(tokArr)).as("sim"))
       } else {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** CDC-style MERGE (upsert + delete) of a change set into a base table —
@@ -29,12 +29,22 @@ object UpsertMerge {
       deleteCol: Option[String] = None,
       /** SQL MERGE errors when a source row matches twice; two change
         * rows with one key would here silently insert BOTH after the
-        * anti-join removes the base row. Checked by default — the check
-        * is FUSED into the anti-join's key build (a per-key raise_error
-        * guard on the distinct-keys aggregate the join needs anyway), so
-        * it costs no extra pass over the change set and surfaces when
-        * the merged frame is first acted on, Spark-lazily. Opt out only
-        * when the producer guarantees unique keys.
+        * anti-join removes the base row. Checked by default, lazily: the
+        * per-key count of the change set calls `raise_error` on any
+        * count above 1, both in the anti-join's keys and in a one-row
+        * verdict the upserts join. The check fires at the FIRST action
+        * on the merged frame, also when the base is empty and the
+        * optimizer drops the anti-join, and also under `limit`/`show`
+        * while the anti-join's keys are broadcast (the usual small
+        * change set: a broadcast is built whole before any row is read).
+        * With a change set too large to broadcast, a partial action over
+        * a non-empty base can finish on base rows before the guard runs;
+        * a full action cannot. The failure is a
+        * `org.apache.spark.SparkRuntimeException` with error condition
+        * `USER_RAISED_EXCEPTION` (possibly wrapped
+        * in a `SparkException` by the failed job), never an
+        * `IllegalArgumentException` at call time. Opt out only when the
+        * producer guarantees unique keys.
         */
       requireUniqueKeys: Boolean = true,
       /** Additive schema evolution: when true, the change set may carry
@@ -72,26 +82,44 @@ object UpsertMerge {
     // The anti-join needs the distinct change keys either way; with the
     // uniqueness check on, build them as groupBy+count and guard each
     // key with a lazy raise_error — a duplicate key throws the moment
-    // the merge is executed, and the check costs zero extra jobs/passes
-    // (the former eager collect() scanned and shuffled the change set
-    // once more per merge — one full extra delta pass at scale, one
-    // extra Spark job per micro-batch in the CDC stream).
+    // the merge is executed, with no eager job (the former eager
+    // collect() scanned and shuffled the change set once more per merge
+    // — one full extra delta pass at scale, one extra Spark job per
+    // micro-batch in the CDC stream).
+    val counted = changes.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("__um_n__"))
+    def refusal(key: Column) = raise_error(concat(
+      lit("UpsertMerge: change set has multiple rows for key "), key,
+      lit(" — one change row per key (set requireUniqueKeys=false " +
+        "to skip this check)")))
+    val keyText = concat_ws(",", keys.map(k => col(k).cast("string")): _*)
     val changeKeys =
-      if (requireUniqueKeys) {
-        val counted = changes.groupBy(keys.map(col): _*)
-          .agg(count(lit(1)).as("__um_n__"))
-        val msg = concat(
-          lit("UpsertMerge: change set has multiple rows for key "),
-          concat_ws(",", keys.map(k => col(k).cast("string")): _*),
-          lit(" — one change row per key (set requireUniqueKeys=false " +
-            "to skip this check)"))
-        counted.select(keys.map { k =>
-          val kt = changes.schema(changes.schema.fieldIndex(k)).dataType
-          when(col("__um_n__") > 1, raise_error(msg).cast(kt))
-            .otherwise(col(k)).as(k)
-        }: _*)
-      } else changes.select(keys.map(col): _*).distinct()
+      if (requireUniqueKeys) counted.select(keys.map { k =>
+        val kt = changes.schema(changes.schema.fieldIndex(k)).dataType
+        when(col("__um_n__") > 1, refusal(keyText).cast(kt)).otherwise(col(k)).as(k)
+      }: _*)
+      else changes.select(keys.map(col): _*).distinct()
     val kept = widened.join(changeKeys, keys, "left_anti")
-    kept.unionByName(upserts.select(widened.columns.map(col).toIndexedSeq: _*))
+    // The anti-join cannot be the guard's only consumer: with an empty
+    // base the optimizer deletes it (PropagateEmptyRelation) and the
+    // duplicates would pass unchecked. The upserts therefore join a
+    // one-row verdict over the same per-key counts: true, or
+    // raise_error on the most repeated key. The one row is broadcast, so
+    // the upserts are not shuffled and keep their partitioning. The
+    // extra cost is one more per-key count of the change set's keys
+    // (Spark plans it apart from the anti-join's) and a one-row
+    // broadcast. A left outer join against the guarded keys would
+    // shuffle every upsert row whenever the keys do not broadcast.
+    val checked =
+      if (!requireUniqueKeys) upserts
+      else {
+        val verdict = counted
+          .agg(max_by(keyText, col("__um_n__")).as("__um_key__"),
+            max(col("__um_n__")).as("__um_max__"))
+          .select(when(col("__um_max__") > 1, refusal(col("__um_key__")).cast("boolean"))
+            .otherwise(lit(true)).as("__um_ok__"))
+        upserts.join(broadcast(verdict), col("__um_ok__"))
+      }
+    kept.unionByName(checked.select(widened.columns.map(col).toIndexedSeq: _*))
   }
 }

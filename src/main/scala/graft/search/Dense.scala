@@ -100,9 +100,11 @@ case class BruteForceDenseEngine(
   * FAISS IVF, warp_pipes/search/dense.py:28-129 + vector_base/utils/
   * faiss.py:204-410 — GPU k-means + inverted lists + nprobe).
   *
-  * Spark-first lowering: `spark.ml.clustering.KMeans` fits `nlist`
-  * centroids; the corpus is tagged with its nearest centroid id
-  * (the inverted lists, materialized as a cluster-partitioned frame);
+  * Spark-first lowering: a seeded `spark.ml.clustering.KMeans` fit
+  * trains `nlist` centroids; the corpus is tagged with its nearest
+  * centroid id by an argmin-L2 expression against the (persisted)
+  * centroids (the inverted lists, materialized as a cluster-partitioned
+  * frame);
   * a query probes its `nprobe` nearest centroids and equi-joins the
   * matching clusters only — pruning the scored candidates by
   * ~nprobe/nlist. PQ compression is out of scope (documented, SURVEY S1).
@@ -124,10 +126,10 @@ case class IVFDenseEngine(
       */
     stateDir: Option[String] = None,
     corpusFingerprint: String = "",
-    /** Caller-supplied centroids (nlist x dim): tagging becomes a pure
-      * argmin-L2 expression (no KMeans), making the whole engine
-      * DETERMINISTIC and externally replayable — the coarse-quantizer
-      * analogue of [[PQDenseEngine]]'s `fixedCodebooks`.
+    /** Caller-supplied centroids (nlist x dim) instead of a KMeans fit,
+      * making the whole engine DETERMINISTIC and externally replayable —
+      * the coarse-quantizer analogue of [[PQDenseEngine]]'s
+      * `fixedCodebooks`.
       */
     fixedCentroids: Option[Seq[Seq[Double]]] = None,
     /** Already-tagged base index rows `(idx, __cv__, cid)` appended
@@ -170,9 +172,6 @@ case class IVFDenseEngine(
   require(baseTagged.isEmpty || fixedCentroids.isDefined,
     "baseTagged (incremental add) requires fixedCentroids — the base " +
       "index's coarse quantizer must be pinned, not re-fit")
-
-  import org.apache.spark.ml.clustering.KMeans
-  import org.apache.spark.ml.functions.array_to_vector
 
   override def params = Map("k" -> config.k.toString, "nlist" -> nlist.toString,
     "nprobe" -> nprobe.toString, "engine" -> "dense_ivf",
@@ -224,9 +223,7 @@ case class IVFDenseEngine(
     require(fingerprint.nonEmpty || stateDir.isEmpty,
       "addVectors with stateDir requires a fingerprint covering base+extra " +
         "— an unchanged state key would serve a previous add's cache")
-    val cents = centroids.orderBy("cid").collect()
-      .map(r => r.getSeq[Double](1).toIndexedSeq: Seq[Double]).toIndexedSeq
-    copy(corpus = extra, fixedCentroids = Some(cents),
+    copy(corpus = extra, fixedCentroids = Some(centroidSeq),
       baseTagged = Some(tagged.select(
         (Seq("idx", "__cv__", "cid") ++ carryCols).map(col): _*)),
       corpusFingerprint =
@@ -255,12 +252,10 @@ case class IVFDenseEngine(
       "removeVectors with stateDir requires a fresh fingerprint covering " +
         "the surviving corpus — an unchanged state key would serve the " +
         "pre-delete cache")
-    val cents = centroids.orderBy("cid").collect()
-      .map(r => r.getSeq[Double](1).toIndexedSeq: Seq[Double]).toIndexedSeq
     // DELETE-WHERE null semantics (SearchEngine.isRemoved): a NULL
     // predicate row is NOT removed — a bare filter(!removed) would
     // silently drop it from the survivors
-    copy(corpus = corpus.limit(0), fixedCentroids = Some(cents),
+    copy(corpus = corpus.limit(0), fixedCentroids = Some(centroidSeq),
       baseTagged = Some(tagged.filter(!SearchEngine.isRemoved(removed)).select(
         (Seq("idx", "__cv__", "cid") ++ carryCols).map(col): _*)),
       carriesDelete = true,
@@ -306,27 +301,41 @@ case class IVFDenseEngine(
   protected def fillRange: Option[Long] =
     if (memberFilter.isDefined || carriesDelete) None else Some(n)
 
-  /** (cid, centroid array<double>) + corpus tagged with cid. With
-    * `stateDir` both frames are fingerprint-cached parquet; the KMeans
-    * fit runs only when neither cache exists (`fitted` is lazy and only
-    * forced inside a cache-miss compute closure).
-    */
-  /** `taggedOwn` = the tag of THIS engine's `corpus` only (what the
-    * incremental fine quantizer of [[IVFPQDenseEngine]] encodes);
-    * `tagged` = taggedOwn plus any `baseTagged` — the full index.
+  /** `centroids` = (cid, centroid array<double>); `taggedOwn` = the tag
+    * of THIS engine's `corpus` only (what the incremental fine quantizer
+    * of [[IVFPQDenseEngine]] encodes); `tagged` = taggedOwn plus any
+    * `baseTagged` — the full index. With `stateDir` each frame is
+    * fingerprint-cached parquet, and the KMeans fit runs only on a
+    * centroids cache miss (`trained` is lazy and only forced inside that
+    * compute closure).
     */
   lazy val (centroids: DataFrame, taggedOwn: DataFrame, tagged: DataFrame) =
     build()
 
+  /** The centroids frame collected to the driver in cid order — nlist×dim
+    * doubles, bounded by config, not data. What the maintenance verbs pin.
+    */
+  private[search] lazy val centroidSeq: Seq[Seq[Double]] =
+    IVFDenseEngine.collectCentroids(centroids)
+
   private lazy val prepared: DataFrame = corpus.select(
     col(corpusIdxCol).cast("long").as("idx") +:
       col(corpusVecCol).as("__cv__") +:
-      array_to_vector(org.apache.spark.sql.functions.transform(
-        col(corpusVecCol), _.cast("double"))).as("features") +:
       carryCols.map(col): _*)
 
-  private lazy val fitted =
-    new KMeans().setK(nlist).setSeed(kmeansSeed).setMaxIter(20).fit(prepared)
+  /** The coarse quantizer stays on `spark.ml` KMeans, unlike the PQ
+    * codebooks ([[Lloyd]]): `SearchSpec`'s IVF recall bound was measured
+    * on this fit's seed-42 centroids, and an equally good Lloyd fit
+    * (lower inertia) lands under it.
+    */
+  private lazy val trained: Seq[Seq[Double]] = {
+    import org.apache.spark.ml.clustering.KMeans
+    import org.apache.spark.ml.functions.array_to_vector
+    new KMeans().setK(nlist).setSeed(kmeansSeed).setMaxIter(20)
+      .fit(prepared.select(array_to_vector(org.apache.spark.sql.functions
+        .transform(col("__cv__"), _.cast("double"))).as("features")))
+      .clusterCenters.map(_.toArray.toSeq).toSeq
+  }
 
   def build(): (DataFrame, DataFrame, DataFrame) = {
     val spark = corpus.sparkSession
@@ -338,37 +347,34 @@ case class IVFDenseEngine(
         case None => compute
       }
     val centsDf = persisted("centroids") {
-      fixedCentroids match {
-        case Some(cents) =>
-          require(cents.size == nlist,
-            s"fixedCentroids must have nlist=$nlist rows (got ${cents.size})")
-          spark.createDataFrame(
-            cents.zipWithIndex.map { case (v, i) => (i, v) }).toDF("cid", "centroid")
-        case None =>
-          spark.createDataFrame(
-            fitted.clusterCenters.zipWithIndex.map { case (v, i) => (i, v.toArray) }
-              .toSeq).toDF("cid", "centroid")
+      val cents = fixedCentroids match {
+        case Some(c) =>
+          require(c.size == nlist,
+            s"fixedCentroids must have nlist=$nlist rows (got ${c.size})")
+          c
+        case None => trained
       }
+      spark.createDataFrame(
+        cents.zipWithIndex.map { case (v, i) => (i, v) }).toDF("cid", "centroid")
     }
     val taggedDf = persisted("tagged") {
-      fixedCentroids match {
-        case Some(cents) =>
-          // argmin-L2 tagging as pure expressions, lowest-cid tie-break —
-          // externally replayable, no fit
-          val v = org.apache.spark.sql.functions.transform(
-            col("__cv__"), _.cast("double"))
-          val dists = org.apache.spark.sql.functions.transform(
-            typedLit(cents), c =>
-              aggregate(zip_with(v, c, (x, y) => (x - y) * (x - y)),
-                lit(0d), (acc, d) => acc + d))
-          prepared.select(col("idx") +: col("__cv__") +:
-            (array_position(dists, array_min(dists)) - 1).cast("int").as("cid") +:
-            carryCols.map(col): _*)
-        case None =>
-          fitted.transform(prepared)
-            .select(col("idx") +: col("__cv__") +:
-              col("prediction").as("cid") +: carryCols.map(col): _*)
-      }
+      // argmin-L2 tagging as pure expressions, lowest-cid tie-break —
+      // externally replayable. Trained centroids are read back from the
+      // (possibly persisted) centroids frame (one small collect job), so
+      // a half-warm state dir re-tags against the cached centroids and
+      // never re-trains. Cost: O(nlist·d) per row, and the higher-order
+      // functions run interpreted (CodegenFallback), unlike spark.ml's
+      // compiled `predict`.
+      val cents = fixedCentroids.getOrElse(IVFDenseEngine.collectCentroids(centsDf))
+      val v = org.apache.spark.sql.functions.transform(
+        col("__cv__"), _.cast("double"))
+      val dists = org.apache.spark.sql.functions.transform(
+        typedLit(cents), c =>
+          aggregate(zip_with(v, c, (x, y) => (x - y) * (x - y)),
+            lit(0d), (acc, d) => acc + d))
+      prepared.select(col("idx") +: col("__cv__") +:
+        (array_position(dists, array_min(dists)) - 1).cast("int").as("cid") +:
+        carryCols.map(col): _*)
     }
     // incremental add: the base index is appended OUTSIDE the persisted
     // stage, so the cache (and the tag computation) covers only the new
@@ -414,6 +420,10 @@ case class IVFDenseEngine(
 }
 
 object IVFDenseEngine {
+  private def collectCentroids(centroids: DataFrame): Seq[Seq[Double]] =
+    centroids.orderBy("cid").collect()
+      .map(r => r.getSeq[Double](1).toIndexedSeq: Seq[Double]).toIndexedSeq
+
   /** Deterministic formula centroids for gates/specs: component t of
     * centroid c is `(((c*29 + t*13) mod 17) - 8) * 0.05` — integer
     * arithmetic then one multiply, replayable in any engine (the coarse

@@ -11,15 +11,17 @@ import org.apache.spark.sql.functions.{transform => arrTransform, _}
   * against O(n·d·4) for raw floats (d=64, m=8 → 32x) — which is what lets
   * a 100 TB corpus's vector index stay cluster-resident.
   *
-  * Build: an independent KMeans codebook per subspace (d/m dims each,
-  * `codebookSize` centroids); the corpus is encoded by the fitted models
-  * (m shuffle-free ml transforms, one pass). Query: ADC (asymmetric
+  * Build: an independent codebook per subspace (d/m dims each,
+  * `codebookSize` centroids), all m trained by [[Lloyd]] on the driver
+  * from ONE bounded, seeded sample (one Spark job); the corpus is encoded
+  * against the codebook literals (argmin-L2 expressions, one
+  * shuffle-free pass). Query: ADC (asymmetric
   * distance computation) — each query row computes one dot-product table
   * per subspace against the codebook (codebookSize·d work per QUERY, not
   * per pair), then each (query, code-row) pair scores as m table lookups
   * instead of d multiplications.
   *
-  * Approximate by construction when KMeans trains the codebooks: covered
+  * Approximate by construction when the codebooks are trained: covered
   * by a recall spec against [[BruteForceDenseEngine]]. With
   * `fixedCodebooks` (caller-supplied, e.g. [[PQDenseEngine.formulaCodebooks]])
   * the whole pipeline — nearest-centroid encoding, ADC tables, top-k — is
@@ -53,7 +55,7 @@ case class PQDenseEngine(
       * lifecycle as [[IVFDenseEngine]]/[[BM25Engine]]; reference engine
       * state dirs, pipes/index.py:65-99). Each piece loads independently;
       * a partially-warm dir stays consistent because every recompute
-      * (PCA fit, seeded KMeans, expression encode) is deterministic for
+      * (PCA fit, seeded Lloyd training, expression encode) is deterministic for
       * the same corpus + params.
       */
     stateDir: Option[String] = None,
@@ -71,9 +73,6 @@ case class PQDenseEngine(
       "fixedRotation when rotate=true — so the base index's quantizer " +
       "stays pinned, not re-fit")
 
-  import org.apache.spark.ml.clustering.KMeans
-  import org.apache.spark.ml.functions.array_to_vector
-
   override def params = Map("k" -> config.k.toString, "m" -> m.toString,
     "codebookSize" -> codebookSize.toString, "engine" -> "dense_pq",
     // CONTENT hashes, not isDefined: two engines with different fixed
@@ -87,7 +86,10 @@ case class PQDenseEngine(
     "rotate" -> rotate.toString,
     "fixedRotation" -> fixedRotation.map(c =>
       graft.core.Fingerprint.hash(c.toString)).getOrElse(""),
-    "incremental" -> baseCodes.isDefined.toString)
+    "incremental" -> baseCodes.isDefined.toString) ++
+    // only when the engine trains its books, so fixed-book engines keep
+    // their keys and no state dir mixes output of two trainers
+    (if (fixedCodebooks.isEmpty) Map("trainer" -> "lloyd") else Map.empty)
 
   private lazy val n: Long =
     corpus.count() + baseCodes.map(_.count()).getOrElse(0L)
@@ -161,9 +163,9 @@ case class PQDenseEngine(
     // L2 to each centroid of the literal codebook, argmin with
     // first-occurrence (= lowest code) tie-break — the arithmetic an
     // external engine replays bit-for-bit, the same nearest-centroid rule
-    // KMeans.predict applies, and (key for state reload) codes never
-    // depend on the fitted model object, so cached books encode without
-    // a refit.
+    // the trainer assigns by, and (key for state reload) codes derive
+    // only from the (possibly persisted) books, so cached books encode
+    // without a retrain.
     val codesDf = persisted("codes") {
       rcorpus.select(
         col(corpusIdxCol).cast("long").as("idx") +:
@@ -185,25 +187,22 @@ case class PQDenseEngine(
     (books, withBase)
   }
 
-  /** Per-subspace KMeans codebooks, round-tripped through a (j, c,
-    * center) parquet frame when `stateDir` is set — reloads skip all m
-    * fits.
+  /** Per-subspace [[Lloyd]] codebooks (subspace j seeded `kmeansSeed + j`)
+    * from one shared sample, round-tripped through a (j, c, center)
+    * parquet frame when `stateDir` is set — reloads skip all m trainings.
     */
   private def loadOrTrainBooks(dsub: Int): Seq[Seq[Seq[Double]]] = {
     val spark = corpus.sparkSession
     val rows = persisted("books") {
-      val prepared = rcorpus.select(
-        (0 until m).map(j =>
-          array_to_vector(arrTransform(
-            slice(qcol(corpusVecCol), j * dsub + 1, dsub), _.cast("double")))
-            .as(s"__f$j")): _*)
-      val trained = (0 until m).flatMap { j =>
-        val model = new KMeans().setK(codebookSize).setSeed(kmeansSeed + j)
-          .setMaxIter(20).setFeaturesCol(s"__f$j").setPredictionCol(s"__c$j")
-          .fit(prepared)
-        model.clusterCenters.zipWithIndex.map { case (v, c) =>
-          (j, c, v.toArray.toSeq) }
-      }
+      val sample = Lloyd.sample(rcorpus, col(corpusIdxCol), qcol(corpusVecCol),
+        codebookSize, kmeansSeed)
+      val books = Lloyd.parallel(m)(j =>
+        Lloyd.train(sample.map(_.slice(j * dsub, (j + 1) * dsub)),
+          codebookSize, kmeansSeed + j))
+      val trained = for {
+        (book, j) <- books.toSeq.zipWithIndex
+        (v, c) <- book.zipWithIndex
+      } yield (j, c, v.toSeq)
       spark.createDataFrame(trained).toDF("j", "c", "center")
     }.orderBy("j", "c").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
@@ -401,7 +400,9 @@ case class IVFPQDenseEngine(
     "carryCols" -> carryCols.mkString(","),
     "filter" -> memberFilter.map(c =>
       graft.core.Fingerprint.hash(c.toString)).getOrElse("")) ++
-    (if (carriesDelete) Map("carriesDelete" -> "true") else Map.empty)
+    (if (carriesDelete) Map("carriesDelete" -> "true") else Map.empty) ++
+    // as PQDenseEngine: the key marks state the Lloyd trainer produced
+    (if (fixedCodebooks.isEmpty) Map("trainer" -> "lloyd") else Map.empty)
 
   override protected def queryTimeParams: Set[String] =
     super.queryTimeParams + "filter"
@@ -459,10 +460,8 @@ case class IVFPQDenseEngine(
     require(fingerprint.nonEmpty || stateDir.isEmpty,
       "addVectors with stateDir requires a fingerprint covering base+extra " +
         "— an unchanged state key would serve a previous add's cache")
-    val cents = ivf.centroids.orderBy("cid").collect()
-      .map(r => r.getSeq[Double](1).toIndexedSeq: Seq[Double]).toIndexedSeq
     copy(corpus = extra,
-      fixedCentroids = Some(cents),
+      fixedCentroids = Some(ivf.centroidSeq),
       fixedCodebooks = Some(pq.codebooks),
       fixedRotation = pq.rotation,
       baseTagged = Some(ivf.tagged.select(
@@ -489,14 +488,12 @@ case class IVFPQDenseEngine(
       "removeVectors with stateDir requires a fresh fingerprint covering " +
         "the surviving corpus — an unchanged state key would serve the " +
         "pre-delete cache")
-    val cents = ivf.centroids.orderBy("cid").collect()
-      .map(r => r.getSeq[Double](1).toIndexedSeq: Seq[Double]).toIndexedSeq
     // DELETE-WHERE null semantics: NULL = not removed on BOTH sides, so
     // the survivor filter and the code anti-join agree on which rows went
     val rm = SearchEngine.isRemoved(removed)
     val removedIds = ivf.tagged.filter(rm).select("idx")
     copy(corpus = corpus.limit(0),
-      fixedCentroids = Some(cents),
+      fixedCentroids = Some(ivf.centroidSeq),
       fixedCodebooks = Some(pq.codebooks),
       fixedRotation = pq.rotation,
       baseTagged = Some(ivf.tagged.filter(!rm).select(

@@ -292,11 +292,9 @@ case class IVFSQDenseEngine(
     require(fingerprint.nonEmpty || stateDir.isEmpty,
       "addVectors with stateDir requires a fingerprint covering base+extra " +
         "— an unchanged state key would serve a previous add's cache")
-    val cents = ivf.centroids.orderBy("cid").collect()
-      .map(r => r.getSeq[Double](1).toIndexedSeq: Seq[Double]).toIndexedSeq
     val row = sq.stats.head()
     copy(corpus = extra,
-      fixedCentroids = Some(cents),
+      fixedCentroids = Some(ivf.centroidSeq),
       fixedStats = Some((row.getSeq[Double](0), row.getSeq[Double](1))),
       baseTagged = Some(ivf.tagged.select(
         (Seq("idx", "__cv__", "cid") ++ carryCols).map(col): _*)),
@@ -318,14 +316,12 @@ case class IVFSQDenseEngine(
       "removeVectors with stateDir requires a fresh fingerprint covering " +
         "the surviving corpus — an unchanged state key would serve the " +
         "pre-delete cache")
-    val cents = ivf.centroids.orderBy("cid").collect()
-      .map(r => r.getSeq[Double](1).toIndexedSeq: Seq[Double]).toIndexedSeq
     val row = sq.stats.head()
     // DELETE-WHERE null semantics: NULL = not removed on BOTH sides
     val rm = SearchEngine.isRemoved(removed)
     val removedIds = ivf.tagged.filter(rm).select("idx")
     copy(corpus = corpus.limit(0),
-      fixedCentroids = Some(cents),
+      fixedCentroids = Some(ivf.centroidSeq),
       fixedStats = Some((row.getSeq[Double](0), row.getSeq[Double](1))),
       baseTagged = Some(ivf.tagged.filter(!rm).select(
         (Seq("idx", "__cv__", "cid") ++ carryCols).map(col): _*)),

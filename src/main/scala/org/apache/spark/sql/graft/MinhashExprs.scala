@@ -258,7 +258,8 @@ case class Poly61SigArrayExpr(child: Expression) extends UnaryExpression {
   *   - `trim` only strips leading/trailing 0x20: a leading whitespace
   *     run otherwise yields one "" token via split, which the
   *     length>0 filter drops — same net result as skipping the run;
-  *     trailing empties are dropped by split itself;
+  *     `split` keeps trailing empty tokens (limit -1), and the same
+  *     length>0 filter drops them;
   *   - a token that is ALL punctuation strips to "" and is dropped by
   *     the length filter, exactly like the HOF chain;
   *   - NULL text propagates null (null-safe unary).

@@ -50,6 +50,44 @@ class UpsertMergeSpec extends SparkSpec {
       .count() == 4)
   }
 
+  private def refusal(run: => Any): Unit = {
+    val e = intercept[Exception](run)
+    def chain(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: chain(t.getCause)
+    assert(chain(e).exists(t => Option(t.getMessage).exists(_.contains("multiple rows"))), e)
+    // the documented type: SparkRuntimeException, USER_RAISED_EXCEPTION
+    assert(chain(e).exists {
+      case t: org.apache.spark.SparkThrowable =>
+        t.getClass.getName == "org.apache.spark.SparkRuntimeException" &&
+          t.getCondition == "USER_RAISED_EXCEPTION"
+      case _ => false
+    }, e)
+  }
+
+  test("duplicate change keys are refused against an empty base, also under limit") {
+    // an empty base lets the optimizer delete the anti-join; the guard
+    // must not go with it
+    val dup = Seq((1L, "a", 1.0), (1L, "b", 2.0), (5L, "e", 5.0)).toDF("k", "s", "v")
+    val emptyLocal = Seq.empty[(Long, String, Double)].toDF("k", "s", "v")
+    val dir = java.nio.file.Files.createTempDirectory("graft-um").toString
+    base.limit(0).write.mode("overwrite").parquet(dir)
+    val emptyParquet = spark.read.parquet(dir)
+    for (b <- Seq(emptyLocal, emptyParquet, base.limit(0))) {
+      refusal(UpsertMerge(b, dup, Seq("k")).collect())
+      refusal(UpsertMerge(b, dup, Seq("k")).limit(1).collect())
+      refusal(UpsertMerge(b, dup, Seq("k")).count())
+    }
+    // a partial action over a non-empty base must not finish before the
+    // guard runs either
+    refusal(UpsertMerge(base, dup, Seq("k")).limit(1).collect())
+    // the same merge without the duplicate goes through, and the guard
+    // drops no null-key upsert
+    assert(UpsertMerge(emptyLocal, dup.filter($"s" =!= "b"), Seq("k"))
+      .orderBy("k").collect().toSeq == Seq(Row(1L, "a", 1.0), Row(5L, "e", 5.0)))
+    val nullKey = Seq((None, "n", 0.0), (Some(7L), "g", 7.0)).toDF("k", "s", "v")
+    assert(UpsertMerge(base, nullKey, Seq("k")).count() == 5)
+  }
+
   test("null delete flag means upsert, not silent delete") {
     val changes = Seq(
       (2L, "B", 21.0, Some(false)), // explicit update
