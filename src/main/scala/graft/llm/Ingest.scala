@@ -32,8 +32,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Scale shape: clean/embed are map-only; dedup is the banded join with
   * corpus-side state cached by fingerprint; the index add never touches
-  * the standing lists; the upsert rewrites O(touched partitions). No
-  * stage shuffles the standing corpus.
+  * the standing lists, and the commit rows come from the add's own tag
+  * and encode stages; the upsert rewrites O(touched partitions). No
+  * stage shuffles the standing corpus. [[run]] materializes the cleaned
+  * and the deduplicated batch once each, so the batch's lineage runs
+  * once per ingest, not once per consumer.
   */
 object IngestPreset {
 
@@ -190,6 +193,18 @@ object IngestPreset {
   /** Ingest one batch of raw pages against the standing state. `corpus`
     * is the cleaned corpus text frame (derive it from the stable source
     * so the signature cache stays warm — [[seed]] returns exactly it).
+    *
+    * The batch's lineage runs once: `clean` is materialized right after
+    * the cleaner and `unique` right after the dedup anti-join, each with
+    * `localCheckpoint(true)`. Without them every consumer re-runs the
+    * cleaner chain and the banded dedup join — the batch signatures, the
+    * embed cache write, the index tag and encode, the commit rows, and
+    * the commit's own reads of its change set. Not `persist()`: a cached
+    * plan keeps its pre-AQE shuffle partition count, which spreads the
+    * op's cache entries (vectors, tags, codes) over more, smaller files,
+    * while a checkpoint keeps the coalesced partitioning AQE chose. The
+    * manifest is read first: a REPLAYED batch id (already committed)
+    * materializes nothing, and its frames stay lazy.
     */
   def run(newRaw: DataFrame, corpus: DataFrame, tableDir: String,
       cacheDir: String, corpusFp: String, batchFp: String,
@@ -200,8 +215,12 @@ object IngestPreset {
         */
       leased: Boolean = false): Ingested = {
     val spark = newRaw.sparkSession
-    val clean = cleaner(newRaw.select("doc_id", "text"))
-      .select("doc_id", "text", "ws_tokens")
+    val replay = graft.streaming.PartitionedUpsert
+      .readManifest(spark, tableDir).exists(_.id == batchId)
+    def once(df: DataFrame): DataFrame =
+      if (replay) df else df.localCheckpoint(true)
+    val clean = once(cleaner(newRaw.select("doc_id", "text"))
+      .select("doc_id", "text", "ws_tokens"))
     // near-dup policy: drop a new page that duplicates the corpus
     // (cross pair lhs) or a smaller-id page of the same batch
     val pairs = IncrementalMinHashDedupPipe("text", "doc_id",
@@ -210,20 +229,20 @@ object IngestPreset {
     val dropped = pairs.select(
       when(col("pair_src") === "cross", col("id_a"))
         .otherwise(col("id_b")).as("doc_id")).distinct()
-    val unique = clean.join(dropped, Seq("doc_id"), "left_anti")
+    val unique = once(clean.join(dropped, Seq("doc_id"), "left_anti"))
     val newVec = embed(unique, cacheDir, batchFp)
     val corpusVec = embed(corpus, cacheDir, s"$corpusFp:corpus-embed")
     val eng = indexBase(corpusVec, cacheDir, corpusFp)
       .addVectors(newVec.select(col("doc_id").as("idx"), col("vector")),
         fingerprint = batchFp)
+    // the batch's rows from the added engine's OWN tag and codes stages:
+    // never a join over the standing index
     def commit(): Unit = graft.streaming.PartitionedUpsert.applyBatch(
       tableRows(newVec,
-        eng.taggedCodes.join(
-          newVec.select(col("doc_id").as("idx")), Seq("idx"))),
+        eng.ivf.taggedOwn.select("idx", "cid")
+          .join(eng.pq.codesOwn, Seq("idx"))),
       batchId, tableDir, Seq("doc_id"), None)
-    val committed = graft.streaming.PartitionedUpsert
-      .readManifest(spark, tableDir).map(_.id)
-    if (committed.contains(batchId)) {
+    if (replay) {
       // replayed batch id: the upsert's no-op contract — read-only, so
       // no lease is taken (keeps warm identical re-runs lock-free)
     } else if (leased) commit()

@@ -3,6 +3,7 @@ package graft.search
 import graft.core.Pipe.qcol
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ArraySeq
 
 /** S2 brute-force dense search (reference `TorchVectorBase`,
   * warp_pipes/search/vector_base/torch.py:20-111: `scores = q @ V.T; topk`).
@@ -203,9 +204,9 @@ case class IVFDenseEngine(
 
   /** Incremental index maintenance: a new engine over `extra` whose
     * coarse quantizer is THIS engine's (already built) centroids —
-    * collected to the driver, nlist×dim doubles, bounded by config not
-    * data — and whose base index is THIS engine's tagged frame, appended
-    * verbatim. Only the new vectors are tagged (argmin-L2, the same
+    * [[centroidSeq]]: nlist×dim doubles, bounded by config not data,
+    * collected only when trained — and whose base index is THIS engine's
+    * tagged frame, appended verbatim. Only the new vectors are tagged (argmin-L2, the same
     * deterministic tie-break as `fixedCentroids` tagging), so the add
     * costs O(|extra|), not O(index): at 100 TB the standing index is
     * never re-shuffled, re-tagged, or re-fit. Search over the result is
@@ -312,11 +313,16 @@ case class IVFDenseEngine(
   lazy val (centroids: DataFrame, taggedOwn: DataFrame, tagged: DataFrame) =
     build()
 
-  /** The centroids frame collected to the driver in cid order — nlist×dim
-    * doubles, bounded by config, not data. What the maintenance verbs pin.
+  /** The centroids in cid order — nlist×dim doubles, bounded by config,
+    * not data. What the maintenance verbs pin. Pinned centroids are
+    * returned as given (no Spark job); trained ones are collected from the
+    * centroids frame. Both come back as `ArraySeq`s, the type a collect
+    * yields: `params` hashes `toString`, so an added engine's state key
+    * stays the same whichever way its centroids were obtained.
     */
   private[search] lazy val centroidSeq: Seq[Seq[Double]] =
-    IVFDenseEngine.collectCentroids(centroids)
+    fixedCentroids.map(c => ArraySeq.from(c.map(v => ArraySeq.from(v))))
+      .getOrElse(IVFDenseEngine.collectCentroids(centroids))
 
   private lazy val prepared: DataFrame = corpus.select(
     col(corpusIdxCol).cast("long").as("idx") +:

@@ -145,10 +145,15 @@ case class PQDenseEngine(
     case None => corpus
   }
 
-  /** codebooks(j)(c) = sub-centroid as doubles; codes = (idx, __c0..__c{m-1}). */
-  lazy val (codebooks: Seq[Seq[Seq[Double]]], codes: DataFrame) = build()
+  /** codebooks(j)(c) = sub-centroid as doubles; codes = (idx,
+    * __c0..__c{m-1}) of the full index; `codesOwn` = the codes of THIS
+    * engine's `corpus` only, before any `baseCodes` are appended (the
+    * fine-quantizer twin of [[IVFDenseEngine.taggedOwn]]).
+    */
+  lazy val (codebooks: Seq[Seq[Seq[Double]]], codesOwn: DataFrame, codes: DataFrame) =
+    build()
 
-  private def build(): (Seq[Seq[Seq[Double]]], DataFrame) = {
+  private def build(): (Seq[Seq[Seq[Double]]], DataFrame, DataFrame) = {
     require(dim % m == 0, s"m=$m must divide vector dim=$dim")
     val dsub = dim / m
     val books = fixedCodebooks match {
@@ -184,7 +189,7 @@ case class PQDenseEngine(
       case Some(base) => base.unionByName(codesDf)
       case None => codesDf
     }
-    (books, withBase)
+    (books, codesDf, withBase)
   }
 
   /** Per-subspace [[Lloyd]] codebooks (subspace j seeded `kmeansSeed + j`)

@@ -114,6 +114,17 @@ object PartitionedUpsert {
   /** Apply one change batch: merge into ONLY the partitions whose hash
     * buckets the batch's keys occupy, leaving every other partition's
     * files untouched on disk.
+    *
+    * The batch is evaluated once: after the replay and behind-id guards
+    * it is materialized with `localCheckpoint(true)`, and the
+    * touched-partition collect, the merge's reads of the change set (its
+    * keys, its duplicate-key verdict, its upserts) and the staged write
+    * all read that one frame. Without it each of them re-runs the
+    * batch's whole lineage — and a nondeterministic producer could give
+    * the collect and the merge different rows. Not `persist()`: a cached
+    * plan keeps its pre-AQE shuffle partitioning, while a checkpoint
+    * keeps the coalesced partitions AQE chose, so the staged write's file
+    * layout does not change. A replayed id returns before any Spark job.
     */
   private[graft] def applyBatch(
       batch: DataFrame,
@@ -130,18 +141,19 @@ object PartitionedUpsert {
         s"$stateDir — a restarted stream with a fresh checkpoint dir cannot " +
         "resume an existing state dir; reuse the original checkpointLocation " +
         "or seed a new stateDir")
+    val changes = batch.localCheckpoint(true)
     val pc = partCol(keys, m.n)
     // the touched-partition set is bounded by n — a driver-side collect
     // of at most n ints, never data rows
-    val touched = batch.select(pc.as("__part__")).distinct()
+    val touched = changes.select(pc.as("__part__")).distinct()
       .collect().map(_.getInt(0)).toSet
     val curPaths = touched.toSeq.sorted.collect {
       case i if m.parts.contains(i) => s"$stateDir/p$i/${m.parts(i)}"
     }
     val cur =
       if (curPaths.nonEmpty) spark.read.parquet(curPaths: _*)
-      else deleteCol.fold(batch)(c => batch.drop(c)).limit(0)
-    val merged = graft.operators.UpsertMerge(cur, batch, keys, deleteCol)
+      else deleteCol.fold(changes)(c => changes.drop(c)).limit(0)
+    val merged = graft.operators.UpsertMerge(cur, changes, keys, deleteCol)
     val written = stagePartitions(
       merged.withColumn("__part__", pc), stateDir, s"v$id")
     // untouched partitions keep their old version entries verbatim; a

@@ -118,4 +118,29 @@ class IngestSpec extends SparkSpec {
     }
     WriterLock.forceRelease(spark, dir)
   }
+
+  test("run: the raw batch is evaluated once; a replayed id stays lazy") {
+    val cache = Files.createTempDirectory("ing-once").toString
+    val (dir, corpus) = IngestPreset.seedCached(corpusRaw, cache, "fpE", "t")
+    val rows = arrivals.count()
+    // a nondeterministic projection cannot be deduplicated by the
+    // optimizer: every evaluation of the batch bumps the counter per row
+    val passes = spark.sparkContext.longAccumulator("ingest-batch-rows")
+    val bump = udf { (t: String) => passes.add(1); t }.asNondeterministic()
+    val raw = arrivals.select(col("doc_id"), bump(col("text")).as("text"))
+    val res = IngestPreset.run(raw, corpus, dir, cache, "fpE", "fpE:b0")
+    assert(passes.value == rows, "one pass over the batch per ingest")
+    // the returned frames are the materialized ones
+    res.clean.count()
+    res.unique.count()
+    assert(passes.value == rows)
+    passes.reset()
+    val replay = IngestPreset.run(raw, corpus, dir, cache, "fpE", "fpE:b0")
+    // the batch-side dedup signatures are the replay's only pass
+    val replayPasses = passes.value
+    assert(replayPasses <= rows)
+    replay.unique.count()
+    assert(passes.value > replayPasses, "a replay must not materialize the batch")
+    assert(replay.table.count() == res.table.count())
+  }
 }

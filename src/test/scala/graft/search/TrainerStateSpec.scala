@@ -68,6 +68,47 @@ class TrainerStateSpec extends SparkSpec {
     assert(got == TrainerStateSpec.FixedStateKeys)
   }
 
+  /** Spark jobs started while `body` runs. The listener bus delivers
+    * events in order but late, so the count runs from a marker job's
+    * start to a second marker's.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.put(Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    def until(name: String): Seq[String] =
+      Iterator.continually(Option(seen.poll(30, java.util.concurrent.TimeUnit.SECONDS))
+        .getOrElse(fail(s"no job-start event for $name")))
+        .takeWhile(_ != name).toSeq
+    sc.addSparkListener(listener)
+    try {
+      marker("trainer-spec-start")
+      body
+      marker("trainer-spec-end")
+      until("trainer-spec-start")
+      until("trainer-spec-end").size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("an add over pinned centroids collects nothing and keeps its state key") {
+    val c = corpus
+    val base = IVFDenseEngine(c.filter(col("idx") % 3 =!= 0), nlist = 8, nprobe = 2,
+      config = cfg, fixedCentroids = Some(cents))
+    var added: IVFDenseEngine = null
+    assert(jobsDuring { added = base.addVectors(c.filter(col("idx") % 3 === 0)) } == 0)
+    // `params` hashes the pinned centroids' toString; this is the value
+    // an add wrote when it collected them from the centroids frame
+    assert(added.params("fixedCents") == "b46e2f2750610e9e")
+  }
+
   test("a half-warm trained state dir rebuilds to the fully warm answers") {
     val c = corpus
     // drop one persisted frame, found by its schema, then rebuild

@@ -143,6 +143,25 @@ class PartitionedUpsertSpec extends SparkSpec {
     assert(!new java.io.File(s"$dir/t/._LATEST.tmp").exists())
   }
 
+  test("applyBatch evaluates the change batch once") {
+    val dir = java.nio.file.Files.createTempDirectory("pups-once").toString
+    val base = (1L to 32L).map(i => (i, i * 1.0)).toDF("k", "v")
+    PartitionedUpsert.seed(base, s"$dir/t", Seq("k"), n = 4)
+    val passes = spark.sparkContext.longAccumulator("upsert-batch-rows")
+    val bump = org.apache.spark.sql.functions.udf { (k: Long) =>
+      passes.add(1); k }.asNondeterministic()
+    val changes = spark.sparkContext
+      .parallelize(Seq((3L, 30.5, false), (9L, 0.0, true), (40L, 400.0, false)), 2)
+      .toDF("k", "v", "del")
+      .select(bump($"k").as("k"), $"v", $"del")
+    PartitionedUpsert.applyBatch(changes, 0, s"$dir/t", Seq("k"), Some("del"))
+    assert(passes.value == 3, "one pass over the change batch")
+    val got = PartitionedUpsert.latest(spark, s"$dir/t").get
+      .orderBy("k").as[(Long, Double)].collect().toSeq
+    assert(got == (1L to 32L).filterNot(_ == 9L).map(i =>
+      (i, if (i == 3L) 30.5 else i * 1.0)) :+ ((40L, 400.0)))
+  }
+
   test("seedFromFlat migrates a flat state dir: identical reads, resumable stream") {
     val dir = java.nio.file.Files.createTempDirectory("pups-mig").toString
     // build a flat table with history: seed + two streamed batches
