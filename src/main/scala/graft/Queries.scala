@@ -2554,8 +2554,8 @@ object Queries {
       // rank-only fusion of HETEROGENEOUS engines (BM25 log-idf sums vs
       // raw dot products — incomparable score scales where the S6
       // sum_scores merge is unsound): fused = Σ_e 1/(60 + rank_e), the
-      // oracle replays both rankings rank-for-rank. The fusion itself is a
-      // per-row Column program over the two ranked arrays — zero shuffles
+      // oracle replays both rankings rank-for-rank. The fusion itself is
+      // one per-row kernel call over the two ranked arrays — zero shuffles
       // beyond what the engines already own.
       val docs = t(s, d, "documents")
       val emb = t(s, d, "embeddings")

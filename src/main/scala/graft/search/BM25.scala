@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions.{transform => arrTransform}
   *   per (query, doc) sum of
   *     idf(t) * tf*(k1+1) / (tf + k1*(1 - b + b*len/avgdl))
   *   with Lucene idf = ln(1 + (N - df + 0.5)/(df + 0.5)) and ES defaults
-  *   k1=1.2, b=0.75 (SURVEY §7.4 risk 4) → window top-k.
+  *   k1=1.2, b=0.75 (SURVEY §7.4 risk 4) → heap top-k per query
+  *   ([[SearchEngine.collapseTopK]]). The per-(query, doc) sum and the
+  *   top-k share one exchange on the query row id.
   *
   * Options mirrored from the reference:
   *   - auxiliary query field scored with weight
@@ -223,7 +225,9 @@ case class BM25Engine(
         mainScores.unionByName(auxScores)
       } else mainScores
 
-    val summed = scored.groupBy(col(rowId), col("idx"))
+    // partitioned by the row id alone, the (row, doc) sum needs no
+    // exchange of its own and hands the top-k its rows in place
+    val summed = scored.repartition(col(rowId)).groupBy(col(rowId), col("idx"))
       .agg(sum("score").as("score"))
     val tempered = temperature.fold(summed)(t =>
       summed.withColumn("score", col("score") / t))

@@ -3,7 +3,6 @@ package graft.search
 import graft.core.Pipe
 import graft.core.Pipe.qcol
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Shared engine configuration (reference `SearchConfig`,
@@ -126,38 +125,49 @@ trait SearchEngine extends Pipe {
 
 object SearchEngine {
   /** Collapse exploded per-candidate scores `(rowId, idx, score)` to
-    * ranked arrays of length <= k, attached back onto `stamped`:
-    * window top-k per query row (score desc, idx asc), then
-    * `sort_array(collect_list(...))` re-assembly. One shuffle on rowId —
-    * rowId is unique per row, so the distribution is perfectly even at
-    * any scale.
+    * ranked arrays of length <= k, attached back onto `stamped`: one
+    * bounded-heap aggregate per query row (Spark's `CollectTopK`, through
+    * [[org.apache.spark.sql.catalyst.expressions.aggregate.GraftCollectTopK]])
+    * over the ascending key `(score IS NULL, NOT isnan(score), -score,
+    * idx)` — exactly the order of a window on score desc (nulls last,
+    * NaN first, -0.0 = 0.0) then idx asc. Each partition keeps at most k
+    * entries per row before the one shuffle on rowId (none when the
+    * candidates already arrive partitioned by it); rowId is unique per
+    * row, so the distribution is perfectly even at any scale. The score
+    * is taken as a double.
     *
     * Query rows with NO candidates keep empty arrays (left join).
     */
   def collapseTopK(
       stamped: DataFrame, exploded: DataFrame, rowId: String, k: Int): DataFrame = {
-    val w = Window.partitionBy(col(rowId)).orderBy(desc("score"), asc("idx"))
-    val top = exploded
-      .withColumn("__rank__", row_number().over(w))
-      .filter(col("__rank__") <= k)
+    import org.apache.spark.sql.catalyst.expressions.aggregate.GraftCollectTopK
+    import org.apache.spark.sql.graft.ColumnBridge
+    val s = col("score").cast("double")
+    val key = struct(s.isNull.as("n"), not(isnan(s)).as("f"), negate(s).as("s"),
+      col("idx").cast("long").as("idx"), s.as("score"))
+    val top = exploded.filter(lit(k > 0))
       .groupBy(col(rowId))
-      .agg(sort_array(collect_list(struct(col("__rank__"), col("idx"), col("score"))))
-        .as("__entries__"))
+      .agg(ColumnBridge.column(GraftCollectTopK(ColumnBridge.expression(key),
+        math.max(k, 1), reverse = true).toAggregateExpression()).as("__entries__"))
       .select(col(rowId),
-        transform(col("__entries__"), _.getField("idx").cast("long")).as("__new_idx__"),
-        transform(col("__entries__"), _.getField("score").cast("double")).as("__new_score__"))
+        col("__entries__.idx").as("__new_idx__"),
+        col("__entries__.score").as("__new_score__"))
     stamped.join(top, Seq(rowId), "left").select(
       stamped.columns.map(qcol) :+
         coalesce(col("__new_idx__"), array().cast("array<long>")).as("__new_idx__") :+
         coalesce(col("__new_score__"), array().cast("array<double>")).as("__new_score__"): _*)
   }
 
-  /** Dot product of two float vectors in double precision, accumulated
-    * left-to-right (matches an engine summing sequentially).
+  /** Dot product of two numeric vectors in double precision, accumulated
+    * left-to-right from 0d (matches an engine summing sequentially); null
+    * when either side is null, holds a null, or the lengths differ. One
+    * codegen kernel ([[org.apache.spark.sql.graft.DotExpr]]), bit-identical
+    * to `aggregate(zip_with(a, b, double(x) * double(y)), 0d, _ + _)`.
     */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0d), (acc, v) => acc + v)
+  def dot(a: Column, b: Column): Column = {
+    import org.apache.spark.sql.graft.{ColumnBridge, DotExpr}
+    ColumnBridge.column(DotExpr(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+  }
 
   /** SQL DELETE-WHERE null semantics for a delete predicate: NULL means
     * "not removed" on EVERY side — keep = `!isRemoved(p)`, drop =

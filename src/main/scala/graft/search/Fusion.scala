@@ -1,7 +1,7 @@
 package graft.search
 
 import graft.core.Pipe
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, round, transform => arrTransform}
 
 /** Reciprocal-rank fusion over a panel of engines.
@@ -16,10 +16,11 @@ import org.apache.spark.sql.functions.{col, round, transform => arrTransform}
   *
   * Execution shape: every engine overlays its ranked arrays onto the query
   * frame (one pass per engine, whatever plan that engine owns); the fusion
-  * itself is a pure per-row Column program over those arrays
-  * ([[SearchResultOps.rrf]]) — ZERO additional shuffles regardless of corpus
-  * or query scale, because ranks are positions in already-ranked arrays, not
-  * a window over an exploded candidate set.
+  * itself is one codegen kernel call per row over those arrays
+  * ([[SearchResultOps.rrf]]), stored in a column so the resize reads it
+  * instead of re-running it — ZERO additional shuffles regardless of
+  * corpus or query scale, because ranks are positions in already-ranked
+  * arrays, not a window over an exploded candidate set.
   *
   * Engines may share an `indexField`: each engine's output columns are
   * renamed away before the next engine runs, so no engine ever sees (or
@@ -30,7 +31,7 @@ import org.apache.spark.sql.functions.{col, round, transform => arrTransform}
   * engine's scores normalize to [0, 1] within its returned list, then
   * candidates sum `weight · normalized` across engines
   * ([[SearchResultOps.minMaxFuse]]). Same execution shape as RRF: one
-  * pass per engine, per-row fusion, zero extra shuffles.
+  * pass per engine, the same per-row fusion kernel, zero extra shuffles.
   */
 case class WeightedFusionPipe(
     engines: Seq[SearchEngine],
@@ -47,9 +48,6 @@ case class WeightedFusionPipe(
     "weights" -> weights.mkString(","), "k" -> config.k.toString,
     "engines" -> engines.map(_.name).mkString(","))
 
-  private def idxKey = s"${config.indexField}.idx"
-  private def scoreKey = s"${config.indexField}.score"
-
   protected def transform(df: DataFrame, keys: Seq[String]): DataFrame = {
     var cur = df
     val sides = engines.zipWithIndex.map { case (e, i) =>
@@ -61,14 +59,9 @@ case class WeightedFusionPipe(
         .drop(Pipe.qcol(e.idxKey)).drop(Pipe.qcol(e.scoreKey))
       (pi, ps)
     }
-    val (fIdx, fScore) = SearchResultOps.minMaxFuse(
+    val fused = SearchResultOps.minMaxFused(
       sides.zip(weights).map { case ((pi, ps), w) => (col(pi), col(ps), w) })
-    val (rIdx, rScore) = SearchResultOps.resize(fIdx, fScore, config.k)
-    val outScore = roundScores.fold(rScore)(p => arrTransform(rScore, v => round(v, p)))
-    cur
-      .withColumn(idxKey, rIdx)
-      .withColumn(scoreKey, outScore)
-      .drop(sides.flatMap(s => Seq(s._1, s._2)): _*)
+    Fusion.output(cur, fused, config, roundScores, sides.flatMap(s => Seq(s._1, s._2)))
   }
 }
 
@@ -83,6 +76,24 @@ private[search] object Fusion {
     engines.foreach(e => require(!(e.config.fillMaskedIndices && e.mayFill),
       s"fusion over engine '${e.name}' requires fillMaskedIndices=false: " +
         "filled padding indices would receive real rank/score contributions"))
+
+  /** Overlay a fused `struct<idx, score>` onto `df` as the resized (and
+    * optionally rounded) result columns, dropping the engines' private
+    * columns. The struct is stored in a column first: the resize reads
+    * its fields several times, and the optimizer does not inline a
+    * non-trivial expression into more than one use, so the kernel runs
+    * once per row.
+    */
+  def output(df: DataFrame, fused: Column, config: SearchConfig,
+      roundScores: Option[Int], privateCols: Seq[String]): DataFrame = {
+    val (rIdx, rScore) = SearchResultOps.resize(
+      col("__fused__.idx"), col("__fused__.score"), config.k)
+    val outScore = roundScores.fold(rScore)(p => arrTransform(rScore, v => round(v, p)))
+    df.withColumn("__fused__", fused)
+      .withColumn(s"${config.indexField}.idx", rIdx)
+      .withColumn(s"${config.indexField}.score", outScore)
+      .drop("__fused__" +: privateCols: _*)
+  }
 }
 
 case class RRFFusionPipe(
@@ -99,9 +110,6 @@ case class RRFFusionPipe(
     "rrfK" -> rrfK.toString, "k" -> config.k.toString,
     "engines" -> engines.map(_.name).mkString(","))
 
-  private def idxKey = s"${config.indexField}.idx"
-  private def scoreKey = s"${config.indexField}.score"
-
   protected def transform(df: DataFrame, keys: Seq[String]): DataFrame = {
     var cur = df
     val sides = engines.zipWithIndex.map { case (e, i) =>
@@ -112,12 +120,7 @@ case class RRFFusionPipe(
         .drop(Pipe.qcol(e.idxKey)).drop(Pipe.qcol(e.scoreKey))
       priv
     }
-    val (fIdx, fScore) = SearchResultOps.rrf(sides.map(col), rrfK)
-    val (rIdx, rScore) = SearchResultOps.resize(fIdx, fScore, config.k)
-    val outScore = roundScores.fold(rScore)(p => arrTransform(rScore, v => round(v, p)))
-    cur
-      .withColumn(idxKey, rIdx)
-      .withColumn(scoreKey, outScore)
-      .drop(sides: _*)
+    Fusion.output(cur, SearchResultOps.rrfFused(sides.map(col), rrfK), config,
+      roundScores, sides)
   }
 }

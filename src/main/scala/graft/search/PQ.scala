@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions.{transform => arrTransform, _}
   * shuffle-free pass). Query: ADC (asymmetric
   * distance computation) — each query row computes one dot-product table
   * per subspace against the codebook (codebookSize·d work per QUERY, not
-  * per pair), then each (query, code-row) pair scores as m table lookups
-  * instead of d multiplications.
+  * per pair; [[adcTables]]), then each (query, code-row) pair scores as m
+  * table lookups instead of d multiplications.
   *
   * Approximate by construction when the codebooks are trained: covered
   * by a recall spec against [[BruteForceDenseEngine]]. With
@@ -95,14 +95,31 @@ case class PQDenseEngine(
     corpus.count() + baseCodes.map(_.count()).getOrElse(0L)
   protected def fillRange: Option[Long] = Some(n)
 
-  lazy val dim: Int =
-    // an all-base engine (e.g. after removeVectors empties the corpus)
-    // has no row to measure — the pinned codebooks carry the dimension
-    corpus.select(size(qcol(corpusVecCol))).head(1).headOption
-      .map(_.getInt(0))
-      .orElse(fixedCodebooks.map(b => m * b.head.head.size))
-      .getOrElse(throw new IllegalStateException(
-        "cannot infer vector dim: empty corpus and no fixedCodebooks"))
+  /** Vector width: pinned codebooks fix it (m · dsub) without touching
+    * the corpus; trained books measure the first corpus row. Either way
+    * the encode projection raises on any vector of another width
+    * ([[checkedCorpus]]), at the first action.
+    */
+  lazy val dim: Int = fixedCodebooks match {
+    case Some(b) => m * b.head.head.size
+    case None =>
+      corpus.select(size(qcol(corpusVecCol))).head(1).headOption
+        .map(_.getInt(0))
+        .getOrElse(throw new IllegalStateException(
+          "cannot infer vector dim: empty corpus and no fixedCodebooks"))
+  }
+
+  /** The corpus with a `raise_error` on every non-null vector whose width
+    * is not [[dim]] — a mismatch fails the first action instead of
+    * encoding silently.
+    */
+  private lazy val checkedCorpus: DataFrame = {
+    val v = qcol(corpusVecCol)
+    corpus.withColumn(corpusVecCol,
+      when(v.isNotNull && size(v) =!= dim, raise_error(concat(
+        lit(s"PQ encode: vector '$corpusVecCol' of width "), size(v).cast("string"),
+        lit(s" in an index of width $dim")))).otherwise(v))
+  }
 
   private def persisted(frame: String)(compute: => DataFrame): DataFrame =
     stateDir match {
@@ -139,10 +156,10 @@ case class PQDenseEngine(
       case None => v
     }
 
-  /** Corpus with the rotation applied (identity when none). */
+  /** Width-checked corpus with the rotation applied (identity when none). */
   private lazy val rcorpus: DataFrame = rotation match {
-    case Some(_) => corpus.withColumn(corpusVecCol, rotated(col(corpusVecCol)))
-    case None => corpus
+    case Some(_) => checkedCorpus.withColumn(corpusVecCol, rotated(col(corpusVecCol)))
+    case None => checkedCorpus
   }
 
   /** codebooks(j)(c) = sub-centroid as doubles; codes = (idx,
@@ -215,28 +232,44 @@ case class PQDenseEngine(
       rows.filter(_._1 == j).sortBy(_._2).map(_._3.toIndexedSeq).toSeq)
   }
 
-  protected def searchRanked(stamped: DataFrame, rowId: String): DataFrame = {
+  /** `(rowId, __t0..__t{m-1})`: per query row, the ADC table of each
+    * subspace — the dot products of the (rotated) query sub-vector with
+    * every codeword of that subspace's book, one
+    * [[org.apache.spark.sql.graft.AdcTableExpr]] kernel call each (the
+    * codebooks are tiny driver-side state, m·k·dsub doubles — the
+    * reference ships them inside the FAISS index blob).
+    * Callers join this frame on the row id AFTER pairing queries with
+    * their codes, so each table is built once per query row whichever
+    * join side the planner builds; computed before that pairing, whole-
+    * stage codegen would defer the projection into the join loop and
+    * rebuild it for every candidate code.
+    */
+  private[search] def adcTables(stamped: DataFrame, rowId: String): DataFrame = {
+    import org.apache.spark.sql.graft.{AdcTableExpr, ColumnBridge}
     val dsub = dim / m
     // queries rotate through the same matrix as the corpus (identity when
     // no rotation); inner products are preserved by orthogonality
-    val qv = rotated(qcol(s"${config.queryField}.vector"))
-    // ADC tables: per query row and subspace, dot products against the
-    // codebook literal (codebooks are tiny driver-side state: m·k·dsub
-    // doubles — the reference ships them inside the FAISS index blob)
-    val withTables = stamped.select(
-      col(rowId) +: (0 until m).map { j =>
-        val book = typedLit(codebooks(j))
-        arrTransform(book, c =>
-          SearchEngine.dot(slice(qv, j * dsub + 1, dsub), c)).as(s"__t$j")
-      }: _*)
+    val qv = ColumnBridge.expression(rotated(qcol(s"${config.queryField}.vector")))
+    stamped.select(col(rowId) +: (0 until m).map { j =>
+      ColumnBridge.column(AdcTableExpr(qv, codebooks(j).map(_.toArray).toArray, j * dsub))
+        .as(s"__t$j")
+    }: _*)
+  }
+
+  /** ADC score of a code row joined with its query's [[adcTables]]: m
+    * table lookups, summed left to right.
+    */
+  private[search] def adcScore: org.apache.spark.sql.Column =
+    (0 until m).map(j => element_at(col(s"__t$j"), col(s"__c$j") + 1)).reduce(_ + _)
+
+  protected def searchRanked(stamped: DataFrame, rowId: String): DataFrame = {
     // codes are ~32x smaller than raw vectors; broadcast under a row cap,
     // partitioned cross join above it (same policy as brute force)
     val c =
       if (n <= PQDenseEngine.BroadcastCodeRowCap) broadcast(codes) else codes
-    val scored = withTables.crossJoin(c)
-      .select(col(rowId), col("idx"),
-        (0 until m).map(j => element_at(col(s"__t$j"), col(s"__c$j") + 1))
-          .reduce(_ + _).as("score"))
+    val scored = stamped.select(col(rowId)).crossJoin(c)
+      .join(adcTables(stamped, rowId), Seq(rowId))
+      .select(col(rowId), col("idx"), adcScore.as("score"))
     SearchEngine.collapseTopK(stamped, scored, rowId, config.k)
   }
 }
@@ -553,30 +586,20 @@ case class IVFPQDenseEngine(
       (Seq("idx", "cid") ++ carryCols).map(col): _*), Seq("idx"))
 
   protected def searchRanked(stamped: DataFrame, rowId: String): DataFrame = {
-    val dsub = pq.dim / m
     val probed = ivf.probes(stamped, rowId)
-    // ADC tables per (query, subspace) — computed on the probe frame so
-    // the code join below carries only (rowId, cid, tables)
-    // queries enter the fine quantizer's basis (identity when unrotated)
-    val rqv = pq.rotated(col("__qv__"))
-    val withTables = probed.select(
-      col(rowId) +: col("cid") +: col("__cscore__") +: (0 until m).map { j =>
-        val book = typedLit(pq.codebooks(j))
-        arrTransform(book, c =>
-          SearchEngine.dot(slice(rqv, j * dsub + 1, dsub), c))
-          .as(s"__t$j")
-      }: _*)
+      .select(col(rowId), col("cid"), col("__cscore__"))
     // the payload filter prunes code rows BEFORE broadcast and ADC —
     // selectivity composes multiplicatively with the nprobe/nlist pruning
     val filteredCodes = memberFilter.map(taggedCodes.filter).getOrElse(taggedCodes)
     val c =
       if (n <= PQDenseEngine.BroadcastCodeRowCap) broadcast(filteredCodes)
       else filteredCodes
-    val adc = (0 until m).map(j =>
-      element_at(col(s"__t$j"), col(s"__c$j") + 1)).reduce(_ + _)
     // residual decomposition: exact coarse term + ADC over the residual
-    val score = if (residual) col("__cscore__") + adc else adc
-    val scored = withTables.join(c, Seq("cid"))
+    val score = if (residual) col("__cscore__") + pq.adcScore else pq.adcScore
+    // the ADC tables join the probed codes on the row id: one table per
+    // (query, subspace), never one per candidate (PQDenseEngine.adcTables)
+    val scored = probed.join(c, Seq("cid"))
+      .join(pq.adcTables(stamped, rowId), Seq(rowId))
       .select(col(rowId), col("idx"), score.as("score"))
     SearchEngine.collapseTopK(stamped, scored, rowId, config.k)
   }

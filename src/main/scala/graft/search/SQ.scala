@@ -176,7 +176,10 @@ case class SQDenseEngine(
   }
 
   /** `(rowId, __qmin__, __qd__)` — the per-query ADC table, reusable by
-    * [[IVFSQDenseEngine]].
+    * [[IVFSQDenseEngine]]. Callers join it on the row id AFTER pairing
+    * queries with their codes, so it is built once per query row: computed
+    * before that pairing, whole-stage codegen would defer the projection
+    * into the join loop and rebuild it for every candidate code.
     */
   private[search] def queryTables(stamped: DataFrame, rowId: String): DataFrame = {
     val qv = qcol(s"${config.queryField}.vector")
@@ -189,16 +192,15 @@ case class SQDenseEngine(
   }
 
   private[search] def adcScore: org.apache.spark.sql.Column =
-    col("__qmin__") + aggregate(
-      zip_with(col("__qd__"), col("codes"), (a, b) => a * b.cast("double")),
-      lit(0d), (acc, v) => acc + v)
+    col("__qmin__") + SearchEngine.dot(col("__qd__"), col("codes"))
 
   protected def searchRanked(stamped: DataFrame, rowId: String): DataFrame = {
     // codes are small; broadcast under the shared code-row cap, partitioned
     // cross join above it (same policy as the PQ scan)
     val c =
       if (n <= PQDenseEngine.BroadcastCodeRowCap) broadcast(codes) else codes
-    val scored = queryTables(stamped, rowId).crossJoin(c)
+    val scored = stamped.select(col(rowId)).crossJoin(c)
+      .join(queryTables(stamped, rowId), Seq(rowId))
       .select(col(rowId), col("idx"), adcScore.as("score"))
     SearchEngine.collapseTopK(stamped, scored, rowId, config.k)
   }
@@ -344,16 +346,16 @@ case class IVFSQDenseEngine(
       (Seq("idx", "cid") ++ carryCols).map(col): _*), Seq("idx"))
 
   protected def searchRanked(stamped: DataFrame, rowId: String): DataFrame = {
-    val probed = ivf.probes(stamped, rowId)
-      .join(sq.queryTables(stamped, rowId), Seq(rowId))
-      .select(col(rowId), col("cid"), col("__qmin__"), col("__qd__"))
+    val probed = ivf.probes(stamped, rowId).select(col(rowId), col("cid"))
     // payload filter prunes code rows BEFORE broadcast and the ADC scan
     val filteredCodes =
       memberFilter.map(taggedCodes.filter).getOrElse(taggedCodes)
     val c =
       if (n <= PQDenseEngine.BroadcastCodeRowCap) broadcast(filteredCodes)
       else filteredCodes
+    // the query table joins the probed codes: once per query row
     val scored = probed.join(c, Seq("cid"))
+      .join(sq.queryTables(stamped, rowId), Seq(rowId))
       .select(col(rowId), col("idx"), sq.adcScore.as("score"))
     SearchEngine.collapseTopK(stamped, scored, rowId, config.k)
   }

@@ -11,9 +11,12 @@ import org.apache.spark.sql.functions._
   * pair of columns — the Spark analogue of the reference's `[B, k]` index /
   * score matrices (result.py:155-177).
   *
-  * All operations here are per-row Column expressions (higher-order array
-  * functions): merging two engines' results never shuffles — it composes
-  * into whatever stage produced them, at any batch size.
+  * All operations here are per-row Column expressions: merging two
+  * engines' results never shuffles — it composes into whatever stage
+  * produced them, at any batch size. The fusions ([[rrf]],
+  * [[minMaxFuse]]) are codegen kernels (`sql/graft/VectorExprs.scala`);
+  * [[merge]], [[resize]] and the sort helpers are higher-order array
+  * functions.
   */
 object SearchResultOps {
 
@@ -92,68 +95,59 @@ object SearchResultOps {
 
   /** Reciprocal-rank fusion of N ranked idx arrays (one per engine):
     * fused(i) = Σ_e 1 / (rrfK + rank_e(i)) over the engines that returned
-    * candidate `i`, with rank_e the 1-based position in engine e's array.
-    * Scores are IGNORED by design — RRF is a rank-only combiner
-    * (Cormack/Clarke/Buettcher, SIGIR'09), which is what makes it robust
-    * to engines with incomparable score scales (BM25 vs cosine).
+    * candidate `i`, with rank_e the 1-based position in engine e's array;
+    * -1 padding contributes nothing. Scores are IGNORED by design — RRF is
+    * a rank-only combiner (Cormack/Clarke/Buettcher, SIGIR'09), which is
+    * what makes it robust to engines with incomparable score scales (BM25
+    * vs cosine).
     *
-    * Like [[merge]], this is a pure per-row Column program over already-
-    * ranked arrays: zero shuffles, composes into whatever stage produced
-    * the engine results. O(k² · engines) per row with k in the tens.
+    * Like [[merge]], this is per-row over already-ranked arrays: zero
+    * shuffles, composes into whatever stage produced the engine results.
+    * One codegen kernel pass per row ([[rrfFused]]), bit-identical to the
+    * `transform`/`filter`/`aggregate`/`array_sort` program it replaced.
     *
     * Returns (idx, score) sorted by fused score desc, idx asc.
     */
-  def rrf(sides: Seq[Column], rrfK: Double): (Column, Column) = {
-    val contribs = sides.map { idx =>
-      filter(
-        transform(idx, (i, pos) =>
-          struct(i.as("idx"), (lit(1d) / (lit(rrfK) + pos + 1)).as("score"))),
-        p => p.getField("idx") =!= -1L)
-    }
-    val all = concat(contribs: _*)
-    val uniq = array_distinct(transform(all, _.getField("idx")))
-    val entries = transform(uniq, i => struct(
-      i.as("idx"),
-      aggregate(
-        filter(all, p => p.getField("idx") === i),
-        lit(0d),
-        (acc, p) => acc + p.getField("score")).as("score")))
-    val sorted = sortEntries(entries)
-    (entriesIdx(sorted), entriesScore(sorted))
+  def rrf(sides: Seq[Column], rrfK: Double): (Column, Column) =
+    split(rrfFused(sides, rrfK))
+
+  /** [[rrf]] as one `struct<idx, score>` column: reference its fields
+    * from a column it was stored in, so the kernel runs once per row.
+    */
+  def rrfFused(sides: Seq[Column], rrfK: Double): Column = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    ColumnBridge.column(org.apache.spark.sql.graft.RrfExpr(
+      sides.map(s => ColumnBridge.expression(s.cast("array<long>"))), rrfK))
   }
 
   /** Min-max weighted score fusion of N ranked (idx, score) pairs: each
     * engine's scores are normalized to [0, 1] WITHIN the row's returned
-    * list (`(s - min)/(max - min)`; a degenerate list where max == min
-    * normalizes to 1 — the candidate was that engine's best and worst),
-    * then candidates sum `weight_e · normalized_e` across engines. The
-    * standard convex-combination hybrid when score scales are
-    * incomparable but magnitudes still carry signal (vs [[rrf]], which
-    * keeps only ranks). Pure per-row algebra — zero shuffles.
+    * list (`(s - min)/(max - min)` over the scores other than -Infinity;
+    * a degenerate list where max == min normalizes to 1 — the candidate
+    * was that engine's best and worst), then candidates sum
+    * `weight_e · normalized_e` across engines. The standard
+    * convex-combination hybrid when score scales are incomparable but
+    * magnitudes still carry signal (vs [[rrf]], which keeps only ranks).
+    * Per row, zero shuffles; the same fusion kernel as [[rrf]]
+    * ([[minMaxFused]]).
     *
     * Returns (idx, score) sorted by fused score desc, idx asc.
     */
-  def minMaxFuse(sides: Seq[(Column, Column, Double)]): (Column, Column) = {
-    val contribs = sides.map { case (idx, score, w) =>
-      val finite = filter(score, s => s =!= NegInf)
-      val mn = array_min(finite)
-      val mx = array_max(finite)
-      filter(
-        zip_with(idx, score, (i, s) => struct(i.as("idx"),
-          (when(mx > mn, (s - mn) / (mx - mn)).otherwise(lit(1d)) * w).as("score"))),
-        p => p.getField("idx") =!= -1L)
-    }
-    val all = concat(contribs: _*)
-    val uniq = array_distinct(transform(all, _.getField("idx")))
-    val entries = transform(uniq, i => struct(
-      i.as("idx"),
-      aggregate(
-        filter(all, p => p.getField("idx") === i),
-        lit(0d),
-        (acc, p) => acc + p.getField("score")).as("score")))
-    val sorted = sortEntries(entries)
-    (entriesIdx(sorted), entriesScore(sorted))
+  def minMaxFuse(sides: Seq[(Column, Column, Double)]): (Column, Column) =
+    split(minMaxFused(sides))
+
+  /** [[minMaxFuse]] as one `struct<idx, score>` column (see [[rrfFused]]). */
+  def minMaxFused(sides: Seq[(Column, Column, Double)]): Column = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    ColumnBridge.column(org.apache.spark.sql.graft.MinMaxFuseExpr(
+      sides.flatMap { case (idx, score, _) => Seq(
+        ColumnBridge.expression(idx.cast("array<long>")),
+        ColumnBridge.expression(score.cast("array<double>"))) },
+      sides.map(_._3)))
   }
+
+  private def split(fused: Column): (Column, Column) =
+    (fused.getField("idx"), fused.getField("score"))
 
   /** Replace negative (padding) indices by a pseudo-random valid id in
     * [0, n). The reference uses true randint (result.py:265-271) — here the

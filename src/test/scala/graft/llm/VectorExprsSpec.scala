@@ -129,4 +129,72 @@ class VectorExprsSpec extends SparkSpec {
       .orderBy("id").collect().toSeq
     assert(got == want)
   }
+
+  private def bits(v: Any): Any = graft.search.HofForms.bits(v)
+
+  private def bothModes(f: => Unit): Unit = graft.search.HofForms.bothModes(spark)(f)
+
+  test("dot kernel matches the HOF form bit-for-bit: nulls, lengths, floats, ints") {
+    import graft.search.{HofForms, SearchEngine}
+    val rnd = new scala.util.Random(5)
+    def v(n: Int): Seq[java.lang.Double] = Seq.fill(n)(Double.box(rnd.nextDouble() * 2 - 1))
+    val rows = (1 to 300).map(i => (i.toLong, v(16), v(16))) ++ Seq(
+      (900L, null, v(3)),
+      (901L, v(3), null),
+      (902L, Seq[java.lang.Double](1.0, null, 2.0), v(3)),
+      (903L, v(4), v(3)), // length mismatch
+      (904L, Seq.empty[java.lang.Double], Seq.empty[java.lang.Double]),
+      (905L, Seq[java.lang.Double](-0.0, 0.0), Seq[java.lang.Double](1.0, 1.0)),
+      (906L, Seq[java.lang.Double](Double.NaN, 1.0), Seq[java.lang.Double](1.0, 2.0)),
+      (907L, Seq[java.lang.Double](Double.PositiveInfinity), Seq[java.lang.Double](0.0)))
+    val df = rows.toDF("id", "a", "b")
+    bothModes {
+      val got = df.select($"id", SearchEngine.dot($"a", $"b").as("d")).orderBy("id")
+        .collect().map(bits).toSeq
+      val want = df.select($"id", HofForms.dot($"a", $"b").as("d")).orderBy("id")
+        .collect().map(bits).toSeq
+      assert(got == want)
+    }
+    // float x double, and the SQ shape: double table x int codes
+    val mixed = Seq((1L, Seq(0.1f, 0.7f, -2.5f), Seq(3, 0, 255), Seq(0.3, 0.9, 1.1)),
+      (2L, Seq(1e-8f, 3.3f, 0f), Seq(1, 2, 3), Seq(-0.0, 2.0, 4.0)))
+      .toDF("id", "f", "i", "d")
+    bothModes {
+      Seq(($"f", $"d"), ($"d", $"i"), ($"f", $"i")).foreach { case (a, b) =>
+        val got = mixed.select($"id", SearchEngine.dot(a, b)).orderBy("id").collect().map(bits).toSeq
+        val want = mixed.select($"id", HofForms.dot(a, b)).orderBy("id").collect().map(bits).toSeq
+        assert(got == want)
+      }
+    }
+  }
+
+  test("ADC table kernel matches the HOF form bit-for-bit incl. poisoning") {
+    import graft.search.{HofForms, PQDenseEngine}
+    import org.apache.spark.sql.graft.{AdcTableExpr, ColumnBridge}
+    val rnd = new scala.util.Random(17)
+    val books = PQDenseEngine.formulaCodebooks(2, 16, 4) :+
+      Seq.fill(8)(Seq.fill(4)(rnd.nextGaussian()))
+    def v(n: Int): Seq[java.lang.Double] = Seq.fill(n)(Double.box(rnd.nextGaussian()))
+    val rows = (1 to 200).map(i => (i.toLong, v(8))) ++ Seq(
+      (900L, null),
+      (901L, Seq[java.lang.Double](1.0, null, 0.5, 0.25, 1.0, 2.0, 3.0, 4.0)), // null in slice 0 only
+      (902L, v(6)), // slice 1 comes out short
+      (903L, v(10)), // longer than the index: slices still full
+      (904L, Seq.empty[java.lang.Double]),
+      (905L, Seq[java.lang.Double](-0.0, -0.0, -0.0, -0.0, 0.0, 0.0, 0.0, 0.0)))
+    val df = rows.toDF("id", "v")
+      .withColumn("f", $"v".cast("array<float>"))
+    def kernel(c: Column, book: Seq[Seq[Double]], offset: Int): Column =
+      ColumnBridge.column(AdcTableExpr(ColumnBridge.expression(c),
+        book.map(_.toArray).toArray, offset))
+    bothModes {
+      for (book <- books; offset <- Seq(0, 4); vc <- Seq($"v", $"f")) {
+        val got = df.select($"id", kernel(vc, book, offset)).orderBy("id")
+          .collect().map(bits).toSeq
+        val want = df.select($"id", HofForms.adcTable(vc, book, offset)).orderBy("id")
+          .collect().map(bits).toSeq
+        assert(got == want, s"offset $offset")
+      }
+    }
+  }
 }

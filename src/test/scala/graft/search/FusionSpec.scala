@@ -85,4 +85,76 @@ class FusionSpec extends SparkSpec {
     }
     assert(e2.getMessage.contains("fillMaskedIndices"))
   }
+
+  import HofForms.bits
+
+  private def assertSame(df: org.apache.spark.sql.DataFrame,
+      got: (org.apache.spark.sql.Column, org.apache.spark.sql.Column),
+      want: (org.apache.spark.sql.Column, org.apache.spark.sql.Column)): Unit =
+    HofForms.bothModes(spark) {
+      val g = df.select(col("id"), got._1, got._2).orderBy("id").collect().map(bits).toSeq
+      val w = df.select(col("id"), want._1, want._2).orderBy("id").collect().map(bits).toSeq
+      assert(g.size == w.size)
+      g.zip(w).foreach { case (a, b) => assert(a == b) }
+    }
+
+  private val rnd = new scala.util.Random(41)
+
+  /** A ranked id list of length 0..8 over a small id space (so lists
+    * overlap and ranks tie), with -1 padding, nulls and repeats.
+    */
+  private def ids(): Seq[java.lang.Long] = Seq.fill(rnd.nextInt(9))(rnd.nextInt(20) match {
+    case 0 => null
+    case 1 | 2 => Long.box(-1L)
+    case v => Long.box(v.toLong)
+  })
+
+  private def scores(n: Int): Seq[java.lang.Double] = Seq.fill(n)(rnd.nextInt(14) match {
+    case 0 => null
+    case 1 => Double.box(Double.NaN)
+    case 2 => Double.box(-0.0)
+    case 3 => Double.box(0.0)
+    case 4 => Double.box(Double.NegativeInfinity)
+    case 5 => Double.box(Double.PositiveInfinity)
+    case 6 | 7 => Double.box(1.0) // ties
+    case _ => Double.box(math.round(rnd.nextGaussian() * 100) / 10.0)
+  })
+
+  test("rrf kernel equals the HOF form bit-for-bit: padding, nulls, ties") {
+    val rows = (1 to 400).map(i => (i.toLong,
+      if (i % 50 == 0) null else ids(), ids(), ids()))
+    val df = rows.toDF("id", "a", "b", "c")
+    for (k <- Seq(60.0, 0.0, 2.5); sides <- Seq(Seq("a"), Seq("a", "b"), Seq("a", "b", "c")))
+      assertSame(df, SearchResultOps.rrf(sides.map(col), k), HofForms.rrf(sides.map(col), k))
+    // a zero divisor raises under ANSI, like Spark's Divide
+    val z = Seq((1L, Seq(3L, 4L))).toDF("id", "a")
+    intercept[Exception](z.select(SearchResultOps.rrf(Seq(col("a")), -2.0)._1).collect())
+    intercept[Exception](z.select(HofForms.rrf(Seq(col("a")), -2.0)._1).collect())
+  }
+
+  test("min-max fusion kernel equals the HOF form bit-for-bit: NaN, +-0, nulls, lengths") {
+    val rows = (1 to 400).map { i =>
+      val (a, b) = (ids(), ids())
+      // mostly equal lengths; sometimes the zip pads either side
+      val (as, bs) = (scores(a.size + (if (i % 7 == 0) 1 else 0)),
+        scores(math.max(0, b.size - (if (i % 11 == 0) 1 else 0))))
+      (i.toLong, a, if (i % 60 == 0) null else as, b, bs)
+    }
+    val df = rows.toDF("id", "ai", "as", "bi", "bs")
+    for (ws <- Seq(Seq(0.7, 0.3), Seq(1.0, -2.0), Seq(0.0, 1.0))) {
+      val sides = Seq((col("ai"), col("as"), ws(0)), (col("bi"), col("bs"), ws(1)))
+      assertSame(df, SearchResultOps.minMaxFuse(sides), HofForms.minMaxFuse(sides))
+      assertSame(df, SearchResultOps.minMaxFuse(sides.take(1)), HofForms.minMaxFuse(sides.take(1)))
+    }
+  }
+
+  test("RRFFusionPipe runs the fusion kernel in one projection, not once per use") {
+    val df = Seq((1L, Seq(1L, 2L), Seq(2L, 3L))).toDF("qid", "a", "b").localCheckpoint()
+    val fused = Fusion.output(df, SearchResultOps.rrfFused(Seq(col("a"), col("b")), 60.0),
+      SearchConfig(k = 3), None, Seq("a", "b"))
+    val plan = fused.queryExecution.optimizedPlan.toString
+    assert("rrf\\(".r.findAllIn(plan).size == 1, plan)
+    assert(fused.select(graft.core.Pipe.qcol("index.idx")).head().getSeq[Long](0) ==
+      Seq(2L, 1L, 3L))
+  }
 }
