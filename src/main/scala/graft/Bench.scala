@@ -1,28 +1,9 @@
 package graft
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    // ad-hoc conf overrides for scale experiments (e.g. the RocksDB
-    // state store at sf10): SPARK_GRAFT_EXTRA_CONF="k=v;k=v"
-    val spark = sys.env.get("SPARK_GRAFT_EXTRA_CONF")
-      .map(_.split(";").filter(_.contains("=")))
-      .getOrElse(Array.empty)
-      .foldLeft(builder0) { (b, kv) =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      }
-      // full-width plan strings: fingerprint cache keys hash plan
-      // renderings; the 25-field default truncation could alias two
-      // distinct wide plans to one persisted-state key
-      .config("spark.sql.debug.maxToStringFields", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // schema preflight: LOUD on drift but non-fatal here — timings for
     // unaffected queries are still worth recording (the affected ones
     // report the -1 sentinel), unlike Verify where drift must fail fast

@@ -17,11 +17,11 @@ import org.apache.spark.sql.functions.{transform => arrTransform, _}
   * [[graft.search.IVFDenseEngine]] does), or pass
   * [[ClusterBalancedSamplePipe.formulaCentroids]] for a deterministic
   * grid an external engine can replay exactly. Assignment is pure
-  * codegen'd expressions (map-only); the per-cluster cap is a SALTED
-  * two-phase [[GroupTopKPipe]] — with few clusters and billions of rows a
-  * single per-cluster sort cannot parallelize, so phase 1 prunes to
-  * top-cap per (cluster, salt bucket) in parallel and phase 2 ranks the
-  * small survivor set exactly.
+  * codegen'd expressions (map-only); the per-cluster cap is the
+  * bounded-heap [[GroupTopKPipe]] — with few clusters and billions of rows
+  * a per-cluster sort cannot parallelize, while the heap keeps at most
+  * `cap` rows per cluster in each input partition before the shuffle
+  * (map-side combine) and ranks that small survivor set exactly.
   */
 case class ClusterBalancedSamplePipe(
     vecCol: String,
@@ -50,7 +50,7 @@ case class ClusterBalancedSamplePipe(
       .withColumn("__cb_slot__", pmod(s1 * s1 + s1, lit(1000003L)))
       .drop("__cb_v__", "__cb_d__")
     GroupTopKPipe(Seq(clusterCol), "__cb_slot__", cap, idCol,
-      descending = false, rankCol = None, saltBuckets = 32)(assigned)
+      descending = false, rankCol = None, useHeap = true)(assigned)
       .drop("__cb_slot__")
   }
 }

@@ -209,9 +209,7 @@ object DedupOps {
     * localCheckpoint-ed per round to keep the plan linear. Returns
     * `(id, cluster)` with cluster = min member id.
     */
-  def connectedComponents(
-      pairs: DataFrame, maxIter: Int = 20,
-      failOnNonConvergence: Boolean = true): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     val spark = pairs.sparkSession
     val edges = pairs
       .select(col("id_a").cast("long").as("u"), col("id_b").cast("long").as("v"))
@@ -284,11 +282,10 @@ object DedupOps {
       // a component with diameter > maxIter is silently SPLIT — multiple
       // "clusters" for one true component, so keep-best would keep
       // multiple survivors. That is a correctness event, not a log line.
-      val msg = s"connectedComponents: NOT converged after $maxIter rounds " +
+      throw new IllegalStateException(
+        s"[graft] connectedComponents: NOT converged after $maxIter rounds " +
         s"($changed labels still changing) — a component with diameter > " +
-        "maxIter is split; raise maxIter"
-      if (failOnNonConvergence) throw new IllegalStateException(s"[graft] $msg")
-      else System.err.println(s"[graft] $msg (failOnNonConvergence=false)")
+        "maxIter is split; raise maxIter")
     }
     labels
   }

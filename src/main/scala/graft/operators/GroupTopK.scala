@@ -14,15 +14,6 @@ import org.apache.spark.sql.functions._
   * the rank filter is pushed into the window operator (no full-group
   * materialization beyond the sort). Skewed groups split under AQE. The
   * output keeps an optional `rankCol` (1-based) for downstream use.
-  *
-  * `saltBuckets > 1` turns on a two-phase plan for FEW-HUGE-GROUPS
-  * inputs (e.g. billions of rows in 8 clusters), where a single
-  * per-group sort cannot parallelize: phase 1 ranks within
-  * (group, hash-salt) — `saltBuckets`-way parallel, each task sorting
-  * |group|/saltBuckets rows — and keeps top-k per bucket, a SUPERSET of
-  * the answer under ANY salt assignment; phase 2 ranks the
-  * <= saltBuckets*k survivors per group. The result is exactly the
-  * single-phase answer (same ties, same ranks), independent of the salt.
   */
 case class GroupTopKPipe(
     groupCols: Seq[String],
@@ -31,7 +22,6 @@ case class GroupTopKPipe(
     tieBreakCol: String,
     descending: Boolean = true,
     rankCol: Option[String] = Some("rank"),
-    saltBuckets: Int = 1,
     /** Bounded-heap aggregate mode: per-group top-k through Spark's
       * internal `CollectTopK` (a TypedImperativeAggregate over a
       * BoundedPriorityQueue) instead of a window. The decisive scale
@@ -49,13 +39,10 @@ case class GroupTopKPipe(
     useHeap: Boolean = false) extends Pipe {
   require(groupCols.nonEmpty, "GroupTopKPipe needs at least one group column")
   require(k > 0, "k must be positive")
-  require(saltBuckets >= 1, "saltBuckets must be >= 1")
-  require(!(useHeap && saltBuckets > 1),
-    "useHeap already bounds per-partition state; salting does not compose")
   override def params = Map("group" -> groupCols.mkString(","),
     "score" -> scoreCol, "k" -> k.toString, "tie" -> tieBreakCol,
     "desc" -> descending.toString, "rank" -> rankCol.getOrElse(""),
-    "salt" -> saltBuckets.toString, "heap" -> useHeap.toString)
+    "heap" -> useHeap.toString)
 
   private def heapTransform(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge
@@ -127,18 +114,9 @@ case class GroupTopKPipe(
   protected def transform(df: DataFrame, ks: Seq[String]): DataFrame = {
     if (useHeap) return heapTransform(df)
     val ord = if (descending) qcol(scoreCol).desc else qcol(scoreCol).asc
-    val pruned =
-      if (saltBuckets <= 1) df
-      else {
-        val w1 = Window.partitionBy(
-          groupCols.map(qcol) :+ pmod(hash(qcol(tieBreakCol)), lit(saltBuckets)): _*)
-          .orderBy(ord, qcol(tieBreakCol))
-        df.withColumn("__gtk_p1__", row_number().over(w1))
-          .filter(col("__gtk_p1__") <= k).drop("__gtk_p1__")
-      }
     val w = Window.partitionBy(groupCols.map(qcol): _*)
       .orderBy(ord, qcol(tieBreakCol))
-    val ranked = pruned.withColumn("__gtk_r__", row_number().over(w))
+    val ranked = df.withColumn("__gtk_r__", row_number().over(w))
       .filter(col("__gtk_r__") <= k)
     rankCol match {
       case Some(r) => ranked.withColumnRenamed("__gtk_r__", r)

@@ -272,4 +272,28 @@ class CoreSpec extends SparkSpec {
     assert(flat.columns.contains("split"))
     assert(flat.count() == dict("open").count() + dict("done").count())
   }
+
+  test("Pipe.widen policy: LineDedup widens a one-partition input; VocabEncode and ResampleBytes do not") {
+    val docs = spark.read.parquet(sf("documents"))
+    val (narrow, wide) = (docs.coalesce(1), docs.repartition(8))
+    def rows(out: DataFrame, cols: Seq[String]) =
+      out.select(cols.map(col): _*).orderBy("doc_id").collect().toSeq
+    def plan(out: DataFrame) = out.queryExecution.executedPlan.toString
+    val lineDedup = graft.llm.LineDedupPipe("text", "doc_id")
+    val lineCols = Seq("doc_id", "text", "n_lines_removed")
+    assert(rows(lineDedup(narrow), lineCols) == rows(lineDedup(wide), lineCols))
+    assert(plan(lineDedup(narrow)).contains("RoundRobinPartitioning"))
+    // vocab encode aggregates right after its map stage, so the only
+    // exchanges are its own aggregation and broadcast ones
+    val vocab = graft.llm.VocabEncodePipe("text", "doc_id", vocabSize = 25)
+    val vocabCols = Seq("doc_id", "token_ids", "n_oov")
+    assert(rows(vocab(narrow), vocabCols) == rows(vocab(wide), vocabCols))
+    assert(!plan(vocab(narrow)).contains("RoundRobinPartitioning"))
+    // the byte resample is map-only: no exchange at all
+    def resample(df: DataFrame) = graft.llm.ResampleBytesPipe("media",
+      targetBytes = 32)(graft.llm.ToMediaColumnPipe("text")(df))
+    val mediaCols = Seq("doc_id", "resized_meta")
+    assert(rows(resample(narrow), mediaCols) == rows(resample(wide), mediaCols))
+    assert(!plan(resample(narrow)).contains("Exchange"), plan(resample(narrow)))
+  }
 }

@@ -236,4 +236,19 @@ class RegistrySpec extends SparkSpec {
     assert(CrossCorpusMinHashPipe("t", "id", a, "text", "doc_id").fingerprint ==
       CrossCorpusMinHashPipe("t", "id", b, "text", "doc_id").fingerprint)
   }
+
+  test("dataset fingerprints distinguish scan paths and are stable") {
+    def fp(path: String) = DatasetFingerprint.of(spark.read.parquet(path))
+    val a = fp("/root/testdata/sf0.001/documents.parquet")
+    assert(a != fp("/root/testdata/sf0.01/documents.parquet"))
+    assert(a == fp("/root/testdata/sf0.001/documents.parquet"))
+  }
+
+  test("dataset fingerprints of RDD-backed frames: distinct per RDD, stable per frame") {
+    import spark.implicits._
+    val a = spark.sparkContext.parallelize(Seq(1, 2, 3)).toDF("v")
+    val b = spark.sparkContext.parallelize(Seq(1, 2, 3)).toDF("v")
+    val fa = DatasetFingerprint.of(a)
+    assert(fa != DatasetFingerprint.of(b) && fa == DatasetFingerprint.of(a))
+  }
 }

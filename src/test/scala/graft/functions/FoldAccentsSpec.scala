@@ -76,4 +76,26 @@ class FoldAccentsSpec extends SparkSpec {
       .head().getLong(0)
     assert(viaSql == viaCol)
   }
+
+  test("sql kernel twins equal their column forms on real docs; html_extract stays codegen'd and map-only") {
+    org.apache.spark.sql.graft.GraftExtensions.register(spark)
+    val docs = spark.read.parquet(sf("documents")).select("doc_id", "text")
+    docs.createOrReplaceTempView("fa_spec_docs")
+    val viaSql = spark.sql(
+      """SELECT doc_id, graft_langid(text) AS l, graft_fingerprint(text) AS f,
+        |  html_extract('<p>' || text || '</p><!--x-->') AS h
+        |FROM fa_spec_docs""".stripMargin)
+    val viaCol = docs.select(col("doc_id"),
+      graft.llm.TextAnalysisOps.languageId(col("text")).as("l"),
+      graft.llm.TextAnalysisOps.fingerprint(col("text")).as("f"),
+      graft.llm.TextExtractOps.htmlExtract(
+        concat(lit("<p>"), col("text"), lit("</p><!--x-->"))).as("h"))
+    assert(viaSql.join(viaCol, Seq("doc_id", "l", "f", "h")).count() == docs.count())
+    assert(!viaSql.queryExecution.executedPlan.toString.contains("Exchange"))
+    // langid/fingerprint are interpreted HOF kernels; the pure-string
+    // html_extract chain projected alone stays in a WholeStageCodegen span
+    val htmlPlan = spark.sql("SELECT doc_id, html_extract(text) AS h FROM fa_spec_docs")
+      .queryExecution.executedPlan.toString
+    assert(htmlPlan.linesIterator.exists(_.trim.startsWith("*(")), htmlPlan)
+  }
 }

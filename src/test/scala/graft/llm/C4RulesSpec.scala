@@ -73,6 +73,19 @@ class C4RulesSpec extends SparkSpec {
     assert(viaSql.except(viaPipe).count() == 0)
     assert(viaPipe.except(viaSql).count() == 0)
   }
+
+  test("crawl preset over real docs plans one fused scan with its filters in the scan") {
+    val docs = spark.read.parquet(sf("documents"))
+      .withColumn("text", regexp_replace(col("text"), " (fast|data) ", ".\n"))
+    val pipe = graft.pipes.SequentialPipe(Seq(
+      IntraDocLineDedupPipe("text"),
+      C4CleanPipe("text"),
+      graft.pipes.LambdaPipe(_.filter(col("c4_keep")), "c4_floor"),
+      GopherQualityPipe("text")))
+    val plan = pipe(docs).select("doc_id", "text", "n_sentences")
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("hashpartitioning") && plan.contains("DataFilters"), plan)
+  }
 }
 
 class SpanDedupSpec extends SparkSpec {

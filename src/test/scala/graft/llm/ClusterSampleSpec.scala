@@ -32,4 +32,15 @@ class ClusterSampleSpec extends SparkSpec {
     assert(out.filter(col("cluster") < 0 || col("cluster") > 7).count() == 0)
     assert(out.count() > 0)
   }
+
+  test("real embeddings: the capped sample is layout-invariant") {
+    val emb = spark.read.parquet(sf("embeddings"))
+    val cents = ClusterBalancedSamplePipe.formulaCentroids(8, 64)
+    val a = ClusterBalancedSamplePipe("embedding", "vec_id", cents, cap = 10)(emb)
+    val b = ClusterBalancedSamplePipe("embedding", "vec_id", cents, cap = 10)(
+      emb.repartition(11))
+    assert(a.groupBy("cluster").count().filter(col("count") > 10).count() == 0)
+    assert(a.select("vec_id", "cluster")
+      .except(b.select("vec_id", "cluster")).count() == 0)
+  }
 }

@@ -124,4 +124,32 @@ class CorpusOpsSpec extends SparkSpec {
       .count()
     assert(bad == 0)
   }
+
+  test("deterministic shuffle on real docs: layout-stable permutation, range-partitioned") {
+    val docs = spark.read.parquet(sf("documents"))
+    val sh = DeterministicShufflePipe("doc_id")(docs)
+    val re = DeterministicShufflePipe("doc_id")(docs.repartition(7))
+    assert(sh.select("doc_id", "shuffle_slot")
+      .except(re.select("doc_id", "shuffle_slot")).count() == 0)
+    assert(sh.count() == docs.count())
+    assert(sh.queryExecution.executedPlan.toString.contains("rangepartitioning"))
+  }
+
+  test("corpus stats on real docs: approx p50 tracks exact, map-side partial aggregate") {
+    val docs = spark.read.parquet(sf("documents"))
+    val exact = CorpusStatsPipe(Seq("lang"), "n_chars", approx = false)(docs)
+    val approx = CorpusStatsPipe(Seq("lang"), "n_chars", approx = true)(docs)
+    val bad = exact.select(col("lang"), col("p50").as("e"))
+      .join(approx.select(col("lang"), col("p50").as("a")), "lang")
+      .filter(abs(col("e") - col("a")) > col("e") * 0.05 + 5).count()
+    assert(bad == 0)
+    assert(exact.queryExecution.executedPlan.toString.contains("partial_"))
+  }
+
+  test("weighted interleave rejects a weight above 2e6 (zero fixed-point inverse)") {
+    intercept[IllegalArgumentException] {
+      InterleaveDatasets(
+        Seq(spark.read.parquet(sf("documents")).select("doc_id") -> 3e6), "doc_id")
+    }
+  }
 }

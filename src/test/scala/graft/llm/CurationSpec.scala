@@ -244,4 +244,90 @@ class CurationSpec extends SparkSpec {
       StratifiedSamplePipe("doc_id", "lang", Seq("en" -> 1.5))
     }
   }
+
+  private def docs = spark.read.parquet(sf("documents"))
+
+  test("repetition stats on real docs: fractions in [0,1], bounded wall-clock") {
+    // the index-based runLengths formulation hung >200 s at sf0.01
+    val t0 = System.nanoTime()
+    val rows = RepetitionStatsPipe("text")(docs)
+      .select("doc_id", "dup_token_frac", "top_bigram_frac", "dup_bigram_frac")
+      .collect()
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(rows.nonEmpty && secs < 30, s"${rows.length} rows in $secs s")
+    assert(rows.forall(r =>
+      (1 to 3).forall(i => r.getDouble(i) >= 0 && r.getDouble(i) <= 1)))
+  }
+
+  test("decontaminate broadcasts the eval n-grams over real docs") {
+    val flagged = DecontaminatePipe(docs.filter(col("doc_id") < 10),
+      "text", "doc_id", 4)(docs)
+    val plan = flagged.queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin") ||
+      plan.contains("BroadcastExchange"), plan)
+  }
+
+  test("stratified sample on real docs: realized rate near the nominal 0.3") {
+    val samp = StratifiedSamplePipe("doc_id", "lang", Seq("en" -> 0.3),
+      defaultRate = 0.7)(docs)
+    val rate = samp.filter(col("lang") === "en").count().toDouble /
+      docs.filter(col("lang") === "en").count()
+    assert(rate > 0.15 && rate < 0.45, s"rate=$rate")
+  }
+
+  test("pp_curate_v2 runs end to end on real docs and every stage bites") {
+    val v2 = graft.SparkEntry.queries("pp_curate_v2")(spark,
+      "/root/testdata/sf0.001")
+    val n = v2.count()
+    assert(n > 0 && n < docs.count(), s"$n survivors")
+    assert(v2.filter(col("n_lines_removed") > 0).count() > 0)
+  }
+
+  test("unigram nll on real docs: positive and finite, broadcast vocab probe") {
+    val ug = UnigramLogProbPipe("text", "doc_id")(docs)
+    assert(ug.filter(col("unigram_nll") <= 0 || col("unigram_nll").isNull ||
+      col("unigram_nll") > 50).count() == 0)
+    assert(ug.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
+  }
+
+  test("line dedup on wrapped real docs: hashKey equals exact, shuffles on xxhash64") {
+    val wrapped = docs.withColumn("text",
+      regexp_replace(trim(col("text")), "((?:\\S+\\s+){7}\\S+)\\s+", "$1\n"))
+    val cols = Seq("doc_id", "text", "n_lines_removed").map(col)
+    val exact = LineDedupPipe("text", "doc_id")(wrapped)
+    val hashed = LineDedupPipe("text", "doc_id", hashKey = true)(wrapped)
+    assert(exact.select(cols: _*).except(hashed.select(cols: _*)).count() == 0 &&
+      hashed.count() == exact.count())
+    assert(hashed.queryExecution.executedPlan.toString.contains("xxhash64"))
+  }
+
+  test("temperature mix on real docs: smallest group whole, largest downsampled, rates broadcast") {
+    val out = TemperatureMixPipe("doc_id", "lang")(docs)
+    val counts = docs.groupBy("lang").count().withColumnRenamed("count", "n0")
+      .join(out.groupBy("lang").count(), Seq("lang"), "left")
+      .select(col("lang"), col("n0"), coalesce(col("count"), lit(0L)).as("n1"))
+      .collect()
+    val small = counts.minBy(_.getLong(1))
+    val big = counts.maxBy(_.getLong(1))
+    assert(small.getLong(2) == small.getLong(1))
+    assert(big.getLong(2) < big.getLong(1))
+    assert(counts.forall(r => r.getLong(2) > 0 && r.getLong(2) <= r.getLong(1)))
+    assert(out.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
+  }
+
+  test("temperature mix rate-filters a NULL group like any other group") {
+    val withNull = docs.select(col("doc_id"),
+      when(col("doc_id") % 3 === 0, lit(null)).otherwise(col("lang")).as("lang"))
+    val nullIn = withNull.filter(col("lang").isNull).count()
+    val nullKept = TemperatureMixPipe("doc_id", "lang")(withNull)
+      .filter(col("lang").isNull).count()
+    assert(nullKept > 0 && nullKept < nullIn, s"$nullKept/$nullIn kept")
+  }
+
+  test("bigram nll on real docs: finite, non-negative, broadcast conditional table") {
+    val bg = BigramLogProbPipe("text", "doc_id")(docs)
+    assert(bg.filter(col("bigram_nll") < 0 || col("bigram_nll").isNull ||
+      isnan(col("bigram_nll"))).count() == 0)
+    assert(bg.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
+  }
 }

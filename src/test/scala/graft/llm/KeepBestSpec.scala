@@ -62,10 +62,6 @@ class KeepBestSpec extends SparkSpec {
       DedupOps.connectedComponents(path, maxIter = 2)
     }}
     assert(e.getMessage.contains("NOT converged"))
-    // explicit opt-out restores the old warn-and-return behavior
-    val loose = forceDistributed { DedupOps.connectedComponents(path,
-      maxIter = 2, failOnNonConvergence = false) }
-    assert(loose.count() == 6)
   }
 
   test("connected components: union-find fast path labels exactly like the loop") {

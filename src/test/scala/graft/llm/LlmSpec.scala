@@ -313,4 +313,41 @@ class LlmSpec extends SparkSpec {
     val plan = TextNormalizePipe("text")(df).queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)
   }
+
+  test("SRP on planted real embeddings: exactly the planted pairs, hamming filter below the vector joins") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join}
+    val raw = spark.read.parquet(sf("embeddings")).select(
+      col("vec_id").cast("long").as("vec_id"),
+      transform(col("embedding"), x => x.cast("double")).as("embedding"))
+    val withPlants = raw.unionByName(raw.filter(col("vec_id") < 30).select(
+      (col("vec_id") + 10000).as("vec_id"),
+      transform(col("embedding"), (x, i) => x + ((i % 5) - 2) * 0.01).as("embedding")))
+    val out = SRPCosineDedupPipe("embedding", "vec_id")(withPlants)
+    val rows = out.select("id_a", "id_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(rows == (0L until 30L).map(i => (i, i + 10000)))
+    // the hamming (bit_count) predicate evaluates over signature-only
+    // inputs, never downstream of a vector-fetch join
+    val hamInputs = out.queryExecution.optimizedPlan.collect {
+      case f: Filter if f.condition.toString.contains("bit_count") =>
+        f.children.flatMap(_.output)
+      case j: Join if j.condition.exists(_.toString.contains("bit_count")) =>
+        j.children.flatMap(_.output)
+    }
+    assert(hamInputs.nonEmpty &&
+      hamInputs.forall(!_.exists(_.name.startsWith("v_"))))
+  }
+
+  test("simhash on planted real docs: hamming <= 3, bit_count filter below the dedup aggregate") {
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    val base = spark.read.parquet(sf("documents")).select(col("doc_id"), col("text"))
+    val sh = SimHashDedupPipe("text", "doc_id", tokenHash = "poly61")(
+      base.unionByName(base.filter(col("doc_id") < 20)
+        .select((col("doc_id") + 10000).as("doc_id"), col("text"))))
+    val rows = sh.collect()
+    assert(rows.nonEmpty && rows.forall(_.getInt(2) <= 3))
+    assert(sh.queryExecution.optimizedPlan.collect {
+      case a: Aggregate if a.toString.contains("bit_count") => a
+    }.nonEmpty)
+  }
 }

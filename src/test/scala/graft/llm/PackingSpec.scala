@@ -88,4 +88,15 @@ class PackingSpec extends SparkSpec {
     val re = pipe(docs.repartition(13)).select("pack_id", "tokens")
     assert(out.select("pack_id", "tokens").except(re).count() == 0)
   }
+
+  test("materialized packs on real docs: prefix sum runs in the RDD lineage") {
+    val docs = spark.read.parquet(sf("documents"))
+      .withColumn("toks", split(trim(col("text")), "\\s+"))
+    val pm = PackMaterializePipe("toks", 128, "doc_id", "doc_id")(docs)
+    val sizes = pm.select("pack_id", "n_tokens").orderBy("pack_id").collect()
+    val total = docs.agg(sum(size(col("toks")))).head().getLong(0)
+    assert(sizes.dropRight(1).forall(_.getInt(1) == 128))
+    assert(sizes.map(_.getInt(1).toLong).sum == total)
+    assert(pm.queryExecution.executedPlan.toString.contains("ExistingRDD"))
+  }
 }

@@ -305,4 +305,54 @@ class SelectionSpec extends SparkSpec {
     assert(CrossCorpusMinHashPipe("text", "doc_id", evalDf, "text",
       "eval_id", jaccardThreshold = 0.5)(docs).collect().toSet == first)
   }
+
+  test("cross-corpus minhash pairs every planted near-copy with its real source") {
+    val docs = spark.read.parquet(sf("documents"))
+    val toks = split(col("text"), " ")
+    val eval = docs.filter(col("doc_id") % 10 === 0).select(
+      (col("doc_id") + 100000).as("eval_id"),
+      array_join(slice(toks, lit(1), greatest(size(toks) - 2, lit(1))), " ")
+        .as("text"))
+    val pairs = CrossCorpusMinHashPipe("text", "doc_id", eval, "text", "eval_id",
+      jaccardThreshold = 0.5)(docs).select("id_a", "id_b").collect()
+    assert(pairs.count(r => r.getLong(1) == r.getLong(0) + 100000) ==
+      docs.filter(col("doc_id") % 10 === 0).count())
+  }
+
+  test("trained log-odds scorer on real docs: 512 weights, finite bias, map-only scoring") {
+    val docs = spark.read.parquet(sf("documents"))
+    val (w, b) = HashedLinearScorerPipe.trainLogOdds(
+      docs.withColumn("y", col("lang") === "en"), "text", "y", 512)
+    val scored = HashedLinearScorerPipe("text", w, b)(docs)
+    val plan = scored.queryExecution.executedPlan.toString
+    assert(w.size == 512 && !b.isNaN)
+    // the only exchange allowed is Pipe.widen's round-robin past a narrow scan
+    assert("Exchange".r.findAllIn(plan).size ==
+      "Exchange RoundRobinPartitioning".r.findAllIn(plan).size, plan)
+    assert(scored.count() == docs.count())
+  }
+
+  test("trainLogOdds on an empty real-docs frame returns finite weights") {
+    val empty = spark.read.parquet(sf("documents")).filter(col("doc_id") < 0)
+      .select(col("text"), (col("doc_id") > 2).as("y"))
+    val (w, b) = HashedLinearScorerPipe.trainLogOdds(empty, "text", "y",
+      numBuckets = 64)
+    assert(w.size == 64 && !b.isNaN && !b.isInfinite)
+  }
+
+  test("incremental dedup on real docs plans band equi-joins only and finds cross pairs") {
+    val docs = spark.read.parquet(sf("documents")).select("doc_id", "text")
+    val toks = split(col("text"), " ")
+    val batch = docs.filter(col("doc_id") % 10 === 0).select(
+      (col("doc_id") + 200000).as("doc_id"),
+      array_join(slice(toks, lit(1), greatest(size(toks) - 2, lit(1))), " ")
+        .as("text"))
+    val out = IncrementalMinHashDedupPipe("text", "doc_id",
+      docs, "text", "doc_id", jaccardThreshold = 0.5)(batch)
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("CartesianProduct") &&
+      !plan.contains("BroadcastNestedLoopJoin"), plan)
+    assert(out.select("pair_src").distinct().collect().map(_.getString(0))
+      .contains("cross"))
+  }
 }

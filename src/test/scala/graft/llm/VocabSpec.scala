@@ -46,4 +46,18 @@ class VocabSpec extends SparkSpec {
     val decoded = row._3.map(i => idToTok(i.toInt)).mkString(" ")
     assert(decoded == row._2.trim.split("\\s+").mkString(" "))
   }
+
+  test("encode on real docs: zero-OOV docs decode exactly, vocab probe is broadcast") {
+    val docs = spark.read.parquet(sf("documents"))
+    val enc = VocabEncodePipe("text", "doc_id", 25)(docs)
+    val vocab = VocabOps.build(docs, "text", 25).select("id", "token").collect()
+      .map(r => r.getInt(0) -> r.getString(1)).toMap
+    val bad = enc.filter(col("n_oov") === 0).select("text", "token_ids")
+      .collect().count { r =>
+        r.getSeq[Long](1).map(i => vocab(i.toInt)).mkString(" ") !=
+          r.getString(0).trim.split("\\s+").mkString(" ")
+      }
+    assert(bad == 0)
+    assert(enc.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
+  }
 }

@@ -62,17 +62,6 @@ class RangeJoinSpec extends SparkSpec {
     assert(bottom.toSeq == Seq(Row("a", 4L), Row("b", 5L)))
   }
 
-  test("salted two-phase group top-k equals single-phase exactly") {
-    val docs = spark.read.parquet(sf("documents"))
-    val plain = GroupTopKPipe(Seq("lang"), "n_chars", 7, "doc_id")(docs)
-      .select("lang", "doc_id", "rank")
-    val salted = GroupTopKPipe(Seq("lang"), "n_chars", 7, "doc_id",
-      saltBuckets = 16)(docs).select("lang", "doc_id", "rank")
-    assert(plain.except(salted).count() == 0 &&
-      salted.except(plain).count() == 0 &&
-      plain.count() == salted.count())
-  }
-
   test("bounded-heap group top-k equals the window mode, ranks included") {
     val docs = spark.read.parquet(sf("documents"))
     val window = GroupTopKPipe(Seq("lang"), "n_chars", 7, "doc_id")(docs)
@@ -96,10 +85,6 @@ class RangeJoinSpec extends SparkSpec {
     assert(plan.contains("partial_collecttopk") ||
       plan.toLowerCase.contains("objecthashaggregate") ||
       plan.toLowerCase.contains("sortaggregate"), plan)
-    // salting + heap do not compose (heap already bounds state)
-    intercept[IllegalArgumentException] {
-      GroupTopKPipe(Seq("g"), "v", 2, "id", useHeap = true, saltBuckets = 4)
-    }
   }
 
   test("heap mode orders LONG scores natively — no 2^53 double collapse") {
@@ -169,5 +154,55 @@ class RangeJoinSpec extends SparkSpec {
       GroupTopKPipe(Seq("g"), "v", 1, "id", useHeap = true)(txt).collect()
     }
     assert(bad.getMessage.contains("numeric"))
+  }
+
+  test("group top-k on real docs: every group bounded by k, kept rows dominate") {
+    val docs = spark.read.parquet(sf("documents"))
+    val topk = GroupTopKPipe(Seq("lang"), "n_chars", 3, "doc_id")(docs)
+    assert(topk.groupBy("lang").count().filter(col("count") > 3).count() == 0)
+    val worstKept = topk.groupBy("lang").agg(min("n_chars").as("wk"))
+    val excluded = docs.join(topk.select("doc_id"), Seq("doc_id"), "left_anti")
+      .groupBy("lang").agg(max("n_chars").as("be"))
+    assert(worstKept.join(excluded, "lang")
+      .filter(col("be") > col("wk")).count() == 0)
+  }
+
+  private def events = graft.streaming.EventStream.readBatch(spark,
+    "/root/testdata/sf0.001")
+
+  test("binned range join equals the naive inequality join on real events") {
+    val ev = events
+    val cl = ev.filter(col("event_type") === "click")
+      .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"))
+    val wn = ev.filter(col("event_type") === "error")
+      .select(col("event_id").as("err_id"), col("user_id"),
+        unix_micros(col("ts")).as("lo"),
+        (unix_micros(col("ts")) + 600L * 1000000L).as("hi"))
+    val binned = RangeJoin.pointInInterval(cl, wn,
+      "ts_us", "lo", "hi", binWidth = 200L * 1000000L, // bins << span
+      keyCols = Seq("user_id")).select("event_id", "err_id")
+    val naive = cl.as("c").join(wn.as("w"),
+      col("c.user_id") === col("w.user_id") &&
+        col("ts_us") >= col("lo") && col("ts_us") <= col("hi"))
+      .select("event_id", "err_id")
+    assert(binned.except(naive).count() == 0 &&
+      naive.except(binned).count() == 0 && binned.count() == naive.count())
+  }
+
+  test("rolling window equals a naive self-join replay on real events") {
+    val evu = events.withColumn("ts_us", unix_micros(col("ts")))
+    val rw = RollingWindowPipe(Seq("user_id"), "ts_us", "value",
+      windowSize = 3600L * 1000000L)(evu)
+    val naive = evu.as("a").join(evu.as("b"),
+        col("a.user_id") === col("b.user_id") &&
+          col("b.ts_us") <= col("a.ts_us") &&
+          col("b.ts_us") >= col("a.ts_us") - 3600L * 1000000L)
+      .groupBy(col("a.event_id").as("event_id"))
+      .agg(count(lit(1)).as("nc"), round(sum(col("b.value")), 4).as("ns"))
+    val bad = rw.select(col("event_id"), col("rolling_cnt"), col("rolling_sum"))
+      .join(naive, "event_id")
+      .filter(col("rolling_cnt") =!= col("nc") ||
+        col("rolling_sum") =!= col("ns")).count()
+    assert(bad == 0)
   }
 }

@@ -39,4 +39,12 @@ class ZOrderSpec extends SparkSpec {
     val (_, sy) = meanSpreads(grid.repartitionByRange(16, col("x")))
     assert(sy > 24, s"x-only layout should leave y unclustered, got $sy")
   }
+
+  test("z-order layout of real orders plans a single range exchange") {
+    val orders = spark.read.parquet(sf("orders"))
+    val z = ZOrder.layout(orders,
+      Seq(col("o_custkey") % 256, col("o_orderkey") % 256), 8, 8)
+    val plan = z.queryExecution.executedPlan.toString
+    assert("rangepartitioning".r.findAllIn(plan.toLowerCase).size == 1, plan)
+  }
 }

@@ -302,4 +302,44 @@ class WeightIOSpec extends SparkSpec {
     assert(m.fingerprint != LinearModel(w, b).fingerprint,
       "file-loaded fingerprint is the file digest, not the structural hash")
   }
+
+  test("BF16 checkpoint end to end: BatchedPredictPipe output bit-identical to the truncated in-code model") {
+    // bf16 = the top 16 bits of a float32; the widening chain
+    // bf16 -> f32 -> f64 is exact
+    def bf16(d: Double): Double = java.lang.Float.intBitsToFloat(
+      (java.lang.Float.floatToRawIntBits(d.toFloat) >>> 16) << 16).toDouble
+    val m0 = MlpModel.formula(64, 32, 16)
+    // perturb the formula weights so the truncation actually bites
+    def jig(m: Seq[Seq[Double]]) = m.map(_.map(v => v + 1.0 / 3.0))
+    val (w1, w2) = (jig(m0.w1), jig(m0.w2))
+    val truncated = MlpModel(w1.map(_.map(bf16)), m0.b1.map(bf16),
+      w2.map(_.map(bf16)), m0.b2.map(bf16))
+    // hand-write the BF16 buffer (the writer emits F32/F64 only)
+    val flat = Seq("w1" -> (Seq(64, 32), w1.flatten), "b1" -> (Seq(32), m0.b1),
+      "w2" -> (Seq(32, 16), w2.flatten), "b2" -> (Seq(16), m0.b2))
+    val (entries, end) = flat.foldLeft((Seq.empty[String], 0L)) {
+      case ((hs, off), (name, (shape, vs))) =>
+        val e = off + vs.size * 2
+        (hs :+ s""""$name":{"dtype":"BF16","shape":[${shape.mkString(",")}],"data_offsets":[$off,$e]}""", e)
+    }
+    val header = ("{" + entries.mkString(",") + "}").getBytes("UTF-8")
+    val pad = (8 - header.length % 8) % 8
+    val buf = java.nio.ByteBuffer.allocate(8 + header.length + pad + end.toInt)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    buf.putLong((header.length + pad).toLong).put(header)
+      .put(Array.fill(pad)(' '.toByte))
+    flat.foreach { case (_, (_, vs)) => vs.foreach(v => buf.putShort(
+      (java.lang.Float.floatToRawIntBits(v.toFloat) >>> 16).toShort)) }
+    val path = Files.createTempDirectory("graft-bf16").resolve("mlp.safetensors")
+    Files.write(path, buf.array())
+    val loaded = MlpModel.fromSafeTensors(path.toString)
+    val emb = spark.read.parquet(sf("embeddings")).select("vec_id", "embedding")
+    def run(m: MlpModel) =
+      BatchedPredictPipe(m, "embedding", "vector", "vec_id", blockSize = 64)(emb)
+        .select("vec_id", "vector").collect()
+        .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val (a, b) = (run(loaded), run(truncated))
+    assert(a.nonEmpty && a.keySet == b.keySet && a.forall { case (k, v) => v == b(k) })
+    assert(loaded.w1 != w1, "truncation must have changed the weights")
+  }
 }

@@ -224,4 +224,51 @@ class EngineStateSpec extends SparkSpec {
       .select("qid", "`index.idx`").collect().map(_.toString).sorted.toSeq
     assert(r3 == r1, "reload must serve the persisted lookup, not recompute")
   }
+
+  test("PQ fixed-codebook state key is a 16-hex-digit content digest") {
+    val corpus = spark.read.parquet(sf("embeddings"))
+      .select(col("vec_id").as("idx"), col("embedding").as("vector"))
+    def key(books: Seq[Seq[Seq[Double]]]) =
+      PQDenseEngine(corpus, fixedCodebooks = Some(books)).params("fixedBooks")
+    val booksA = Seq(Seq(Seq(1.0, 2.0)), Seq(Seq(3.0, 4.0)))
+    val booksB = Seq(Seq(Seq(1.0, 2.0)), Seq(Seq(3.0, 5.0)))
+    val ka = key(booksA)
+    assert(ka == key(booksA) && ka != key(booksB))
+    assert(ka.length == 16 &&
+      ka.forall(c => c.isDigit || ('a' to 'f').contains(c)), ka)
+  }
+
+  test("BM25 stats persist without a stateDir: postings cached, n equals the corpus") {
+    val docs = spark.read.parquet(sf("documents"))
+    val eng = BM25Engine(docs, SearchConfig(k = 5, queryIdCol = Some("qid")),
+      corpusIdxCol = "doc_id", corpusTextCol = "text")
+    val lvl = eng.stats.postings.storageLevel
+    assert(lvl.useMemory && lvl.useDisk, lvl.toString)
+    assert(eng.stats.n == docs.count())
+  }
+
+  test("fixed-codebook PQ state: a second engine hits the persisted entries") {
+    val dir = Files.createTempDirectory("graft-pqhit").toString
+    val emb = spark.read.parquet(sf("embeddings"))
+      .select(col("vec_id").cast("long").as("idx"), col("embedding").as("vector"))
+    def engine() = PQDenseEngine(emb, m = 8, codebookSize = 16,
+      config = SearchConfig(k = 5, fillMaskedIndices = false,
+        queryIdCol = Some("qid")),
+      fixedCodebooks = Some(PQDenseEngine.formulaCodebooks(8, 16, 8)),
+      stateDir = Some(dir), corpusFingerprint = "pq-hit-fp")
+    val queries = emb.filter(col("idx") < 3)
+      .select(col("idx").as("qid"), col("vector").as("query.vector"))
+    def run() = engine()(queries).select(col("qid"), col("`index.idx`"))
+      .orderBy("qid").collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toSeq
+    val r1 = run()
+    val entries = new java.io.File(dir).listFiles()
+      .filter(f => f.isDirectory && !f.getName.startsWith("_tmp"))
+    // a hit never rewrites content, but CachedStage.apply touches the
+    // entry dir's mtime: the proof is the contained files' (path, mtime)
+    def files() = entries.flatMap(_.listFiles())
+      .map(f => f.getPath -> f.lastModified()).toSet
+    val before = files()
+    val r2 = run()
+    assert(entries.nonEmpty && files() == before && r1 == r2)
+  }
 }

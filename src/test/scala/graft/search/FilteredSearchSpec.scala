@@ -140,4 +140,21 @@ class FilteredSearchSpec extends SparkSpec {
     assert(ranked(viaDense(queries(6))) ==
       ranked(BruteForceDenseEngine(corpus.filter(pred), cfg)(queries(6))))
   }
+
+  test("filtered IVF: the member predicate restricts results and reaches the persisted state scan") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-filter").toString
+    val eng = IVFDenseEngine(corpus, nlist = 4, nprobe = 2, cfg,
+      fixedCentroids = Some(IVFDenseEngine.formulaCentroids(4, 64)),
+      stateDir = Some(dir), corpusFingerprint = "ivf-filter-pushdown",
+      carryCols = Seq("label"), memberFilter = Some(pred))
+    val out = eng(queries(6))
+    out.collect() // the tagged state is parquet on disk after the first run
+    val plan = eng(queries(6)).queryExecution.executedPlan.toString
+    assert(plan.matches("(?s).*PushedFilters: \\[[^\\]]*label[^\\]]*\\].*"), plan)
+    val label = corpus.select(col("idx").cast("long"), col("label")).collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val idxs = out.select(explode(col("`index.idx`")).as("i"))
+      .select(col("i").cast("long")).collect().map(_.getLong(0))
+    assert(idxs.nonEmpty && idxs.forall(i => label(i) % 3 == 1))
+  }
 }

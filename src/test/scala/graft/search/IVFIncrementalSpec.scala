@@ -158,4 +158,40 @@ class IVFIncrementalSpec extends SparkSpec {
     assert(eng.removeVectors(col("idx") === 0, fingerprint = "rm-v2")
       .corpusFingerprint == "rm-v2")
   }
+
+  test("removeVectors pushes the NOT filter into the persisted state scan; BM25 remove equals a survivors rebuild") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-remove").toString
+    val c = SearchConfig(k = 10, fillMaskedIndices = false, queryIdCol = Some("qid"))
+    val four = IVFDenseEngine.formulaCentroids(4, 64)
+    val qs = queries()
+    val base = IVFDenseEngine(corpus(), nlist = 4, nprobe = 2, c,
+      fixedCentroids = Some(four), stateDir = Some(dir),
+      corpusFingerprint = "ivf-remove")
+    base.tagged.count() // warm the persisted state
+    val out = base.removeVectors(col("idx") % 4 === 1,
+      fingerprint = "ivf-remove-rm")(qs)
+    val survivors = IVFDenseEngine(corpus().filter(col("idx") % 4 =!= 1),
+      nlist = 4, nprobe = 2, c, fixedCentroids = Some(four))
+    assert(out.orderBy("qid").collect()
+      .sameElements(survivors(qs).orderBy("qid").collect()))
+    val plan = out.queryExecution.executedPlan.toString
+    assert(plan.matches("(?s).*PushedFilters: \\[[^\\]]*(Not|NOT)[^\\]]*\\].*"), plan)
+    val idxs = out.select(explode(col("`index.idx`")).as("i"))
+      .select(col("i").cast("long")).collect().map(_.getLong(0))
+    assert(idxs.nonEmpty && idxs.forall(_ % 4 != 1))
+    // BM25: removed docs unreachable, statistics shifted to the survivors'
+    val docs = spark.read.parquet(sf("documents"))
+    val removed = BM25Engine(docs, c, corpusIdxCol = "doc_id",
+      corpusTextCol = "text", roundScores = Some(4))
+      .removeDocuments(col("docId") % 4 === 1)
+    val rebuilt = BM25Engine(docs.filter(col("doc_id") % 4 =!= 1), c,
+      corpusIdxCol = "doc_id", corpusTextCol = "text", roundScores = Some(4))
+    val textQueries = docs.filter(col("doc_id") < 8)
+      .select(col("doc_id").as("qid"),
+        array_join(slice(split(col("text"), " "), 1, 5), " ").as("query.text"))
+    assert(removed(textQueries).orderBy("qid").collect()
+      .sameElements(rebuilt(textQueries).orderBy("qid").collect()))
+    assert(removed.stats.n == rebuilt.stats.n &&
+      removed.stats.avgdl == rebuilt.stats.avgdl)
+  }
 }

@@ -62,4 +62,26 @@ class MaxSimSpec extends SparkSpec {
     // maxsim keeps that candidate set and orders 1 (score 2) over 3 (1)
     assert(out.getSeq[Long](0) == Seq(1L, 3L))
   }
+
+  test("dense recall then maxsim re-rank on real embeddings: self on top, no UDF") {
+    def shl(c: org.apache.spark.sql.Column, p: Int) =
+      concat(slice(c, lit(p + 1), size(c) - p), slice(c, lit(1), lit(p)))
+    val emb = spark.read.parquet(sf("embeddings"))
+    val dense = emb.select(col("vec_id").cast("long").as("idx"),
+      col("embedding").as("vector"))
+    val multi = emb.select(col("vec_id").cast("long").as("idx"),
+      array(col("embedding"), shl(col("embedding"), 1)).as("vectors"))
+    val qs = emb.filter(col("vec_id") < 4)
+      .select(col("vec_id").cast("long").as("qid"),
+        col("embedding").as("query.vector"),
+        array(col("embedding"), shl(col("embedding"), 1)).as("query.vectors"))
+    val c = SearchConfig(k = 5, fillMaskedIndices = false, queryIdCol = Some("qid"))
+    val out = IndexPipe(Seq(BruteForceDenseEngine(dense, c.copy(k = 10)),
+      MaxSimEngine(multi, c)))(qs)
+    val rows = out.select(col("qid"), qcol("index.idx")).collect()
+    assert(rows.forall(r => r.getSeq[Long](1).head == r.getLong(0)))
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("BatchEvalPython") &&
+      !plan.toLowerCase.contains("scalaudf"), plan)
+  }
 }

@@ -183,4 +183,15 @@ class SQSpec extends SparkSpec {
       withState.removeVectors(col("idx") === 0)
     }
   }
+
+  test("SQ8 under the code-row cap broadcasts the codes; stats train with a partial aggregate") {
+    val eng = SQDenseEngine(corpus,
+      SearchConfig(k = 5, fillMaskedIndices = false, queryIdCol = Some("qid")))
+    val searchPlan = eng(queries(4)).queryExecution.executedPlan.toString
+    assert(searchPlan.contains("BroadcastNestedLoopJoin") &&
+      !searchPlan.contains("CartesianProduct"), searchPlan)
+    val statsPlan = eng.stats.queryExecution.executedPlan.toString
+    assert(statsPlan.contains("partial_min") ||
+      statsPlan.contains("HashAggregate"), statsPlan)
+  }
 }

@@ -342,4 +342,16 @@ class SearchSpec extends SparkSpec {
     val r = AutoSearchEngine("dense", small, cfg)(queries)
     assert(r.select(element_at(col("`index.idx`"), 1)).head().getLong(0) == 9L)
   }
+
+  test("registry-built opq_ivf_pq on real embeddings: queries find themselves at top-1") {
+    val emb = spark.read.parquet(sf("embeddings"))
+    val corpus = emb.select(col("vec_id").as("idx"), col("embedding").as("vector"))
+    val queries = emb.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("qid"), col("embedding").as("query.vector"))
+    val eng = AutoSearchEngine("opq_ivf_pq", corpus,
+      SearchConfig(k = 3, fillMaskedIndices = false, queryIdCol = Some("qid")))
+    val hits = eng(queries)
+      .select(col("qid"), element_at(col("`index.idx`"), 1).as("top1")).collect()
+    assert(hits.count(r => r.getLong(0) == r.getLong(1)) >= 8)
+  }
 }

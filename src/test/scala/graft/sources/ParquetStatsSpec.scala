@@ -46,4 +46,15 @@ class ParquetStatsSpec extends SparkSpec {
     assert(xY > 60, s"1-d layout unexpectedly clustered y ($xY)")
     assert(meanRange(s"$tmp/z", "x") < 32, "z layout lost x locality")
   }
+
+  test("compacted z-order write of real orders: the footer audit counts every row") {
+    val orders = spark.read.parquet(sf("orders"))
+      .select(col("o_orderkey"), (col("o_custkey") % 256).as("x"),
+        (col("o_orderkey") % 256).as("y"))
+    val n = Formats.writeCompacted(
+      ZOrder.layout(orders, Seq(col("x"), col("y")), 8, 8), s"$tmp/zc", 1L << 20)
+    val st = ParquetStats.fileStats(spark, s"$tmp/zc", Seq("x", "y")).collect()
+    assert(st.filter(_.getString(2) == "x").map(_.getLong(1)).sum == orders.count())
+    assert(st.map(_.getString(0)).distinct.length == n)
+  }
 }

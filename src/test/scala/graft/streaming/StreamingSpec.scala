@@ -536,4 +536,12 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(drained == sunk)
   }
+
+  test("streaming near-dedup: two full drains over the planted corpus emit the same pairs") {
+    def drain() = EventStream.runNearDedupStream(spark, "/root/testdata/sf0.001")
+      .dropDuplicates("id_a", "id_b")
+      .select("id_a", "id_b").collect().map(_.toString).sorted.toSeq
+    val first = drain()
+    assert(first.nonEmpty && first == drain())
+  }
 }

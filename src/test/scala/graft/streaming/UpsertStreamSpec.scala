@@ -404,4 +404,25 @@ class UpsertStreamSpec extends SparkSpec {
       e.getCause.getMessage.contains("seed"))
     q.stop()
   }
+
+  test("lease: a same-pid lease of a foreign application is refused; our own stopped lease reclaims") {
+    import org.apache.hadoop.fs.Path
+    val dir = java.nio.file.Files.createTempDirectory("graft-wl-app").toString
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val lock = new Path(s"$dir/_WRITER_LOCK")
+    val pid = ProcessHandle.current().pid()
+    def plant(json: String): Unit = {
+      fs.delete(lock, false)
+      val out = fs.create(lock, false)
+      out.write(json.getBytes("UTF-8")); out.close()
+    }
+    plant(s"""{"token":"x","pid":$pid,"app":"application_foreign_1",""" +
+      """"label":"other-host","ts":0}""")
+    intercept[IllegalStateException] { WriterLock.acquire(spark, dir, "spec") }
+    plant(s"""{"token":"y","pid":$pid,""" +
+      s""""app":"${spark.sparkContext.applicationId}","label":"me","ts":0}""")
+    val token = WriterLock.acquire(spark, dir, "spec2")
+    WriterLock.release(spark, dir, token)
+    assert(token.nonEmpty)
+  }
 }

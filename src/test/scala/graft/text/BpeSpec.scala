@@ -178,4 +178,24 @@ class BpeSpec extends SparkSpec {
         r.getString(1).trim.split("\\s+").filter(_.nonEmpty).mkString)
     }
   }
+
+  test("encode on real docs: 6 merges, lossless, no keyed shuffle") {
+    val docs = spark.read.parquet(sf("documents"))
+    val merges = BpeOps.learn(docs, "text", numMerges = 6)
+    val bp = BpeEncodePipe("text", merges)(docs)
+    assert(merges.size == 6)
+    assert(bp.filter(concat_ws("", col("bpe_tokens")) =!=
+      concat_ws("", split(trim(col("text")), "\\s+"))).count() == 0)
+    // the round-robin widen is allowed; a hash or range shuffle is not
+    val plan = bp.queryExecution.executedPlan.toString
+    assert(!plan.contains("hashpartitioning") &&
+      !plan.contains("rangepartitioning"), plan)
+  }
+
+  test("maxLength = 2 with specials emits exactly [bos, eos] on real docs") {
+    val ids = TokenizerPipe(maxLength = Some(2), specialTokens = Some((101, 102)))(
+      spark.read.parquet(sf("documents")).limit(5))
+      .select("input_ids").collect().map(_.getSeq[Int](0).toSeq)
+    assert(ids.nonEmpty && ids.forall(_ == Seq(101, 102)))
+  }
 }
