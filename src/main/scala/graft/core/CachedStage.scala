@@ -63,10 +63,14 @@ object CachedStage {
     hit.getOrElse {
       val tmp = new Path(cacheDir, s"_tmp_$key")
       if (fs.exists(tmp)) fs.delete(tmp, true)
-      compute.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      val c = compute
+      c.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
       if (fs.exists(dir)) fs.delete(dir, true)
       fs.rename(tmp, dir)
-      spark.read.parquet(dir.toString)
+      // read back with the written frame's schema: the file source makes
+      // it nullable, exactly what inference would return, and a
+      // schema-given read runs no footer-merging inference job
+      spark.read.schema(c.schema).parquet(dir.toString)
     }
   }
 

@@ -158,6 +158,43 @@ object SearchEngine {
         coalesce(col("__new_score__"), array().cast("array<double>")).as("__new_score__"): _*)
   }
 
+  /** Attach a serve kernel's ranked `struct<idx, score>` to `stamped` as
+    * `__new_idx__` / `__new_score__` — the served twin of
+    * [[collapseTopK]]'s output, one narrow projection. The kernel runs
+    * once per row: it sits in its own column, read twice, which
+    * `CollapseProject` does not inline. A null row id gets empty arrays,
+    * as it does from the join-back.
+    */
+  private[search] def attachServed(stamped: DataFrame, rowId: String, served: Column): DataFrame =
+    stamped.withColumn("__served__", when(col(rowId).isNotNull, served)).select(
+      stamped.columns.toSeq.map(Pipe.qcol) :+
+        coalesce(col("__served__.idx"), array().cast("array<long>")).as("__new_idx__") :+
+        coalesce(col("__served__.score"), array().cast("array<double>")).as("__new_score__"): _*)
+
+  /** The name a served index carries in the query plan: the engine's
+    * fingerprint (its parameters) combined with the
+    * [[graft.pipes.DatasetFingerprint]] of each frame the index was
+    * collected from — the state's parquet paths and sizes, as the join
+    * plan's leaves name them. Stable from run to run over the same
+    * persisted state, distinct for different state.
+    */
+  private[search] def serveKey(e: SearchEngine, frames: DataFrame*): String =
+    graft.core.Fingerprint.combine(
+      e.fingerprint +: frames.map(graft.pipes.DatasetFingerprint.of): _*)
+
+  /** Run an engine's one-time index collect under the job description
+    * `<engine> serve <fingerprint prefix>` (the prefix as
+    * [[graft.core.Manifest]] prints it), restoring the caller's
+    * description afterwards.
+    */
+  private[search] def serveCollect[T](e: SearchEngine, spark: org.apache.spark.sql.SparkSession)(
+      body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(s"${e.name} serve ${e.fingerprint.take(12)}")
+    try body finally sc.setJobDescription(prev)
+  }
+
   /** Dot product of two numeric vectors in double precision, accumulated
     * left-to-right from 0d (matches an engine summing sequentially); null
     * when either side is null, holds a null, or the lengths differ. One

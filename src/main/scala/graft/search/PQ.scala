@@ -3,6 +3,7 @@ package graft.search
 import graft.core.Pipe.qcol
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{transform => arrTransform, _}
+import org.apache.spark.sql.graft.{ColumnBridge, IvfPqIndex, IvfPqList, IvfPqServe, IvfPqServeExpr, ServeKernels}
 
 /** Product-quantization compressed dense search (reference FAISS PQ /
   * IVF-PQ, warp_pipes/search/vector_base/utils/faiss.py:30-87, 247-410 —
@@ -329,7 +330,15 @@ object OPQ {
 }
 
 object PQDenseEngine {
-  /** Codes rows are ~(8 + 4m) bytes; 4M rows ≈ 160 MB broadcast at m=8. */
+  /** Codes rows are ~(8 + 4m) bytes; 4M rows ≈ 160 MB broadcast at m=8.
+    * Also the cap under which [[IVFPQDenseEngine]] serves queries from a
+    * once-per-engine broadcast index. Measured at the cap (4M residual
+    * vectors, m=8, nlist=64, 4 cores, `-Xmx3g`): the served index retains
+    * 314 MB of driver heap (value plus broadcast blocks) against 672 MB
+    * for the join plan's per-query code broadcast, and sampled heap use
+    * peaked at 2.2 GB during the first batch against 2.7 GB; the first
+    * batch took 15.5 s against 27.7 s, a later one 0.7 s against 18.9 s.
+    */
   val BroadcastCodeRowCap: Long = 4000000L
 
   /** Deterministic formula codebook: component t of centroid c in
@@ -352,7 +361,26 @@ object PQDenseEngine {
   *
   * Candidate volume is |queries| * n * nprobe/nlist rows of m SMALL codes
   * — both pruned and compressed, the shape that scales to a cluster-
-  * resident index over a 100 TB corpus. Divergence from FAISS: codes
+  * resident index over a 100 TB corpus.
+  *
+  * Query shape, chosen by the indexed row count `n`:
+  *   - `n` ≤ [[PQDenseEngine.BroadcastCodeRowCap]] (≈ 160 MB at m=8 on
+  *     every executor): on the first query the engine instance collects
+  *     its centroids and the (member-filtered) `codes ⋈ tagged` rows once,
+  *     under the job description `IVFPQDenseEngine serve <fingerprint
+  *     prefix>`, packs the members into per-list arrays on the executors,
+  *     and ships the index as a broadcast variable;
+  *     each query row is then answered by one
+  *     [[org.apache.spark.sql.graft.IvfPqServeExpr]] call — probe, ADC
+  *     tables, residual sum and top-k bit-identical to the join plan — so
+  *     a query batch is one narrow projection with no join, exchange or
+  *     per-batch state broadcast. A new instance (`addVectors`,
+  *     `removeVectors`, `rebalance`) collects its own index;
+  *   - above the cap: the partitioned join plan — probes ⋈ members on
+  *     cid ⋈ ADC tables on the row id, heap top-k per query — the plan
+  *     that runs an index larger than executor memory.
+  *
+  * Divergence from FAISS: codes
   * encode raw vectors against a global codebook, not per-list residuals
   * (r = x - centroid) — simpler, same asymptotics, slightly lower recall
   * at equal m; covered by the recall spec like every approximate engine.
@@ -585,20 +613,69 @@ case class IVFPQDenseEngine(
     pq.codes.join(ivf.tagged.select(
       (Seq("idx", "cid") ++ carryCols).map(col): _*), Seq("idx"))
 
-  protected def searchRanked(stamped: DataFrame, rowId: String): DataFrame = {
+  protected def searchRanked(stamped: DataFrame, rowId: String): DataFrame =
+    if (served.isDefined) searchServed(stamped, rowId) else searchJoined(stamped, rowId)
+
+  /** The inverted-list members both query plans score: `codes ⋈ tagged`
+    * after the member filter, whose selectivity composes with the
+    * nprobe/nlist pruning.
+    */
+  private def members: DataFrame =
+    memberFilter.map(taggedCodes.filter).getOrElse(taggedCodes)
+
+  /** The index a query batch is served from, with its key (see
+    * [[SearchEngine.serveKey]]): the centroid rows and the members'
+    * `(cid, idx, codes)`, collected once per engine instance — the members
+    * packed into per-list arrays on the executors — and broadcast
+    * (`sc.broadcast` runs no job). None — the join plan serves — above
+    * [[PQDenseEngine.BroadcastCodeRowCap]] indexed rows.
+    */
+  @transient private lazy val served
+      : Option[(org.apache.spark.broadcast.Broadcast[IvfPqIndex], String)] =
+    if (n > PQDenseEngine.BroadcastCodeRowCap) None
+    else {
+      // the frames (and any training they need) are built before the
+      // labelled collects, so the label covers the collects alone
+      val cents = ivf.centroids.select("cid", "centroid")
+      val rows = members.select(col("cid") +: col("idx") +: (0 until m).map(j => col(s"__c$j")): _*)
+      val books = pq.codebooks
+      val spark = cents.sparkSession
+      val (c, lists) = SearchEngine.serveCollect(this, spark)(
+        (cents.collect(), ServeKernels.collectPacked(rows)(IvfPqList.pack(m))))
+      val index = IvfPqIndex(c, cents.schema("centroid").dataType,
+        IvfPqList.merge(lists.toSeq), books)
+      Some((spark.sparkContext.broadcast(index), SearchEngine.serveKey(this, cents, rows)))
+    }
+
+  /** The served query plan: one [[IvfPqServeExpr]] call per query row. */
+  private[search] def searchServed(stamped: DataFrame, rowId: String): DataFrame = {
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val (index, key) = served.getOrElse(throw new IllegalStateException(
+      s"IVF-PQ index exceeds the broadcast cap ${PQDenseEngine.BroadcastCodeRowCap}"))
+    val spark = stamped.sparkSession
+    val qv = qcol(s"${config.queryField}.vector")
+    val rotation = pq.rotation.map { _ =>
+      val q = StructType(Seq(StructField("q", stamped.select(qv).schema.head.dataType)))
+      ServeKernels.bound(spark, q, pq.rotated(col("q")))
+    }
+    val lookup = ServeKernels.bound(spark, IvfPqServe.lookupSchema,
+      element_at(col("t"), col("c") + 1))
+    val kernel = IvfPqServeExpr(ColumnBridge.expression(qv),
+      new IvfPqServe(index, key, nprobe, config.k, residual, rotation, lookup))
+    SearchEngine.attachServed(stamped, rowId, ColumnBridge.column(kernel))
+  }
+
+  /** The partitioned join plan: probes ⋈ members on cid ⋈ ADC tables on
+    * the row id, heap top-k per query.
+    */
+  private[search] def searchJoined(stamped: DataFrame, rowId: String): DataFrame = {
     val probed = ivf.probes(stamped, rowId)
       .select(col(rowId), col("cid"), col("__cscore__"))
-    // the payload filter prunes code rows BEFORE broadcast and ADC —
-    // selectivity composes multiplicatively with the nprobe/nlist pruning
-    val filteredCodes = memberFilter.map(taggedCodes.filter).getOrElse(taggedCodes)
-    val c =
-      if (n <= PQDenseEngine.BroadcastCodeRowCap) broadcast(filteredCodes)
-      else filteredCodes
     // residual decomposition: exact coarse term + ADC over the residual
     val score = if (residual) col("__cscore__") + pq.adcScore else pq.adcScore
     // the ADC tables join the probed codes on the row id: one table per
     // (query, subspace), never one per candidate (PQDenseEngine.adcTables)
-    val scored = probed.join(c, Seq("cid"))
+    val scored = probed.join(members, Seq("cid"))
       .join(pq.adcTables(stamped, rowId), Seq(rowId))
       .select(col(rowId), col("idx"), score.as("score"))
     SearchEngine.collapseTopK(stamped, scored, rowId, config.k)

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures what the s36 gate's headline number should measure — the
@@ -22,12 +21,8 @@ object Bm25RemoveScale {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft-sf10docs")
     val stateDir = args.lift(1).getOrElse("/tmp/graft-cache/bm25-rm-scale")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "48g")
-      .appName("bm25-remove-scale").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("spark.driver.memory" -> "48g",
+      "spark.app.name" -> "bm25-remove-scale")
 
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text")

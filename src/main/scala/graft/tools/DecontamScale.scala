@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the decontamination eval-literal scan —
@@ -24,12 +23,8 @@ object DecontamScale {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/graft-sf1")
     val subset = args.lift(1).map(_.toInt).getOrElse(5000)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "32g")
-      .appName("decontam-scale").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession("spark.driver.memory" -> "32g",
+      "spark.app.name" -> "decontam-scale")
 
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id", "text")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Time [[graft.search.LSHDenseEngine]] layouts against a fixture dir —
@@ -18,10 +17,7 @@ object LshScale {
     val nBits = args(1).toInt
     val bands = args.lift(2).map(_.toInt).getOrElse(6)
     val nQ = args.lift(3).map(_.toInt).getOrElse(100)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     val corpus = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id").as("idx"), col("embedding").as("vector"))
     val queries = spark.read.parquet(s"$dir/embeddings.parquet")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Multi-window watermark measurement for [[graft.streaming.StreamingNearDedup]]
@@ -32,14 +31,10 @@ object NearDupWindowScale {
     val watermarkSec = 36000L // the gate's "10 hours"
     val bands = 32
 
-    val b = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-    if (provider == "rocksdb") b.config(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession((if (provider == "rocksdb") Seq(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      else Nil): _*)
     import spark.implicits._
 
     // ---- fixture: sf docs + mutated plants, slotted across the timeline

@@ -28,15 +28,11 @@ object ScaleData {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/tmp/graft-sf1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      // legacy-source tolerance: a TIMESTAMP(NANOS) events source reads as
-      // epoch-nanos long (written back as bare INT64, which
-      // EventStream.adaptTs treats as nanos); the conf is a no-op for the
-      // current micros-encoded fixtures, whose ts passes through unchanged
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // legacy-source tolerance: a TIMESTAMP(NANOS) events source reads as
+    // epoch-nanos long (written back as bare INT64, which
+    // EventStream.adaptTs treats as nanos); the conf is a no-op for the
+    // current micros-encoded fixtures, whose ts passes through unchanged
+    val spark = graft.LocalSession("spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
     val off = 10000000L
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** TPC-H-side scale replica for the CDC/profile sf10 rung —
@@ -25,10 +24,7 @@ object ScaleTpch {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = args.lift(1).getOrElse("/tmp/graft-sf10tpch")
     val factor = args.lift(2).map(_.toInt).getOrElse(100)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     val off = 1000000000L
 
     val orders = spark.read.parquet(s"$src/orders.parquet")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Time [[graft.llm.SRPCosineDedupPipe]] layouts against a fixture dir —
@@ -14,10 +13,7 @@ object SrpScale {
     val dir = args(0)
     val nBits = args(1).toInt
     val bands = args.lift(2).map(_.toInt).getOrElse(6)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding").as("v"))
     def once(): (Double, Long) = {

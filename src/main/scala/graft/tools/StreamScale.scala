@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** sf10 scale rung for the STATEFUL streaming family — the watermark-state
@@ -29,15 +28,10 @@ object StreamScale {
     require(provider == "rocksdb" || provider == "default",
       s"provider must be 'rocksdb' or 'default', got '$provider'")
     val only = args.drop(2).toSet
-    val b0 = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.debug.maxToStringFields", "4096")
-    val spark = (if (provider == "rocksdb")
-      b0.config("spark.sql.streaming.stateStore.providerClass",
+    val spark = graft.LocalSession((if (provider == "rocksdb") Seq(
+      "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    else b0).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      else Nil): _*)
 
     // last progress per query id — stateful gates may run chained queries,
     // so a gate's state report is the union over the queries it started

@@ -396,6 +396,73 @@ object AdcTableExpr {
   val evaluations = new java.util.concurrent.atomic.LongAdder
 }
 
+/** Accumulates `(id, score)` contributions into per-id sums, in
+  * first-occurrence order of the ids, each a left fold from 0d; a null
+  * contribution poisons its id's sum. Shared by the fusion kernels and
+  * [[Bm25ServeExpr]].
+  */
+private[graft] final class FusionSums {
+  private val slot = new java.util.HashMap[java.lang.Long, Integer]
+  private var ids = new Array[Long](16)
+  private var sums = new Array[Double](16)
+  private var nulls = new Array[Boolean](16)
+  private var n = 0
+
+  def add(id: Long, score: Double, scoreIsNull: Boolean): Unit = {
+    val key = java.lang.Long.valueOf(id)
+    val at = slot.get(key)
+    val u =
+      if (at != null) at.intValue
+      else {
+        if (n == ids.length) {
+          ids = java.util.Arrays.copyOf(ids, 2 * n)
+          sums = java.util.Arrays.copyOf(sums, 2 * n)
+          nulls = java.util.Arrays.copyOf(nulls, 2 * n)
+        }
+        slot.put(key, n); ids(n) = id; n += 1
+        n - 1
+      }
+    if (scoreIsNull) nulls(u) = true
+    else if (!nulls(u)) sums(u) += score
+  }
+
+  /** Every id with its sum and null flag, in first-occurrence order. */
+  def foreach(f: (Long, Double, Boolean) => Unit): Unit = {
+    var u = 0
+    while (u < n) { f(ids(u), sums(u), nulls(u)); u += 1 }
+  }
+
+  /** The sums ordered by the fusion comparator (see [[FusionKernel]]). */
+  def result(): InternalRow = {
+    val order = new Array[AnyRef](n)
+    var i = 0
+    while (i < n) { order(i) = Integer.valueOf(i); i += 1 }
+    java.util.Arrays.sort(order, new java.util.Comparator[AnyRef] {
+      def compare(l: AnyRef, r: AnyRef): Int = {
+        val a = l.asInstanceOf[Integer].intValue
+        val b = r.asInstanceOf[Integer].intValue
+        val c =
+          if (nulls(a) || nulls(b)) 0
+          else SQLOrderingUtil.compareDoubles(sums(a), sums(b))
+        if (c > 0) -1
+        else if (c < 0) 1
+        else java.lang.Long.compare(ids(a), ids(b))
+      }
+    })
+    val outIds = new Array[Long](n)
+    val outScores = new Array[Double](n)
+    val outNull = new Array[Boolean](n)
+    i = 0
+    while (i < n) {
+      val u = order(i).asInstanceOf[Integer].intValue
+      outIds(i) = ids(u); outScores(i) = sums(u); outNull(i) = nulls(u)
+      i += 1
+    }
+    InternalRow(UnsafeArrayData.fromPrimitiveArray(outIds),
+      VecUtil.doubles(outScores, outNull))
+  }
+}
+
 /** Shared machinery of the rank-fusion kernels: contributions
   * `(idx, score)` are collected in the order the HOF form concatenates
   * them (engine by engine, position by position, after dropping null and
@@ -410,62 +477,6 @@ object AdcTableExpr {
 private[graft] abstract class FusionKernel extends Expression {
   override def nullable: Boolean = true
   override def dataType: DataType = FusionKernel.resultType
-
-  /** Accumulates contributions into per-id sums. */
-  protected final class Sums {
-    private val slot = new java.util.HashMap[java.lang.Long, Integer]
-    private var ids = new Array[Long](16)
-    private var sums = new Array[Double](16)
-    private var nulls = new Array[Boolean](16)
-    private var n = 0
-
-    def add(id: Long, score: Double, scoreIsNull: Boolean): Unit = {
-      val key = java.lang.Long.valueOf(id)
-      val at = slot.get(key)
-      val u =
-        if (at != null) at.intValue
-        else {
-          if (n == ids.length) {
-            ids = java.util.Arrays.copyOf(ids, 2 * n)
-            sums = java.util.Arrays.copyOf(sums, 2 * n)
-            nulls = java.util.Arrays.copyOf(nulls, 2 * n)
-          }
-          slot.put(key, n); ids(n) = id; n += 1
-          n - 1
-        }
-      if (scoreIsNull) nulls(u) = true
-      else if (!nulls(u)) sums(u) += score
-    }
-
-    def result(): InternalRow = {
-      val order = new Array[AnyRef](n)
-      var i = 0
-      while (i < n) { order(i) = Integer.valueOf(i); i += 1 }
-      java.util.Arrays.sort(order, new java.util.Comparator[AnyRef] {
-        def compare(l: AnyRef, r: AnyRef): Int = {
-          val a = l.asInstanceOf[Integer].intValue
-          val b = r.asInstanceOf[Integer].intValue
-          val c =
-            if (nulls(a) || nulls(b)) 0
-            else SQLOrderingUtil.compareDoubles(sums(a), sums(b))
-          if (c > 0) -1
-          else if (c < 0) 1
-          else java.lang.Long.compare(ids(a), ids(b))
-        }
-      })
-      val outIds = new Array[Long](n)
-      val outScores = new Array[Double](n)
-      val outNull = new Array[Boolean](n)
-      i = 0
-      while (i < n) {
-        val u = order(i).asInstanceOf[Integer].intValue
-        outIds(i) = ids(u); outScores(i) = sums(u); outNull(i) = nulls(u)
-        i += 1
-      }
-      InternalRow(UnsafeArrayData.fromPrimitiveArray(outIds),
-        VecUtil.doubles(outScores, outNull))
-    }
-  }
 
   /** The fused result of the (all non-null) input arrays. */
   def fuse(arrays: Array[ArrayData]): InternalRow
@@ -532,7 +543,7 @@ case class RrfExpr(children: Seq[Expression], rrfK: Double) extends FusionKernel
     FusionKernel.checkTypes(prettyName, children, _ => LongType)
 
   def fuse(arrays: Array[ArrayData]): InternalRow = {
-    val sums = new Sums
+    val sums = new FusionSums
     var e = 0
     while (e < arrays.length) {
       val ids = arrays(e)
@@ -581,7 +592,7 @@ case class MinMaxFuseExpr(children: Seq[Expression], weights: Seq[Double])
   private val ws = weights.toArray
 
   def fuse(arrays: Array[ArrayData]): InternalRow = {
-    val sums = new Sums
+    val sums = new FusionSums
     var e = 0
     while (e < ws.length) {
       val ids = arrays(2 * e)

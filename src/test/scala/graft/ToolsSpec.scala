@@ -26,6 +26,13 @@ class ToolsSpec extends SparkSpec {
     assert(missing.isEmpty, s"mains missing from README's Tools table: $missing")
   }
 
+  test("no graft.tools main hard-codes a Spark master: each builds graft.LocalSession") {
+    val hardCoded = Files.list(Paths.get("src/main/scala/graft/tools")).iterator().asScala
+      .filter(p => "\\.master\\(|local\\[".r.findFirstIn(Files.readString(p)).isDefined)
+      .map(_.getFileName.toString).toSeq
+    assert(hardCoded.isEmpty, s"tools that set their own master: $hardCoded")
+  }
+
   test("Profile prints a build/plan/exec line per repetition, stage lines, and the plan file") {
     val planDir = Files.createTempDirectory("graft-profile").toString
     val lines = ArrayBuffer.empty[String]

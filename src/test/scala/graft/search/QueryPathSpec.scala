@@ -103,6 +103,26 @@ class QueryPathSpec extends SparkSpec {
       .exists(t => String.valueOf(t.getMessage).contains("of width 32 in an index of width 64")))
   }
 
+  test("after the first batch, a fused 48-query RRF batch runs in at most 3 jobs") {
+    val docs = spark.read.parquet(sf("documents"))
+    val bm25 = BM25Engine(docs, cfg, corpusIdxCol = "doc_id", corpusTextCol = "text",
+      roundScores = Some(4))
+    val ivfpq = IVFPQDenseEngine(corpus, nlist = 4, nprobe = 2, m = 2, codebookSize = 16,
+      config = cfg, residual = true,
+      fixedCodebooks = Some(PQDenseEngine.formulaCodebooks(2, 16, 32)),
+      fixedCentroids = Some(IVFDenseEngine.formulaCentroids(4, 64)))
+    val q = queries.join(docs.select(col("doc_id").as("qid"),
+      array_join(slice(split(col("text"), " "), 1, 4), " ").as("query.text")), Seq("qid"))
+      .localCheckpoint(true)
+    assert(q.count() == 48)
+    val fusion = RRFFusionPipe(Seq(bm25, ivfpq), cfg, rrfK = 60.0)
+    val first = fusion(q).collect()
+    var again: Array[org.apache.spark.sql.Row] = null
+    val jobs = jobsDuring { again = fusion(q).collect() }
+    assert(jobs <= 3, s"$jobs jobs")
+    assert(again.map(HofForms.bits).toSeq == first.map(HofForms.bits).toSeq)
+  }
+
   private case class TopKCase(k: Int, cands: Seq[(Long, java.lang.Double)])
 
   /** Candidate lists with unique ids whose scores tie often and include
