@@ -24,6 +24,13 @@ object CachedStage {
   /** Run `compute` (or reuse a previous run's result) under
     * `cacheDir/<key>`.
     *
+    * A hit runs no Spark job: [[StateRead]] takes the entry's schema from
+    * the footer Spark's inference would read, on the driver. A hit whose
+    * layout or footer is unreadable (no data file, an empty data file, a
+    * truncated first file) is a miss that recomputes. A miss writes the
+    * entry and reads it back with the written frame's schema — the
+    * write is its one job.
+    *
     * Concurrency with [[vacuum]]: a hit refreshes the entry's mtime, so
     * only a plan held unread past the whole TTL can race an eviction.
     * If the entry vanishes between this call's plan and the caller's
@@ -52,13 +59,11 @@ object CachedStage {
       try fs.setTimes(dir, System.currentTimeMillis(), -1)
       catch { case _: Exception => () }
       // the read lists files eagerly: a vacuum landing between the
-      // _SUCCESS probe above and this listing surfaces HERE as a
-      // plan-time analysis error (PATH_NOT_FOUND if the dir went,
-      // UNABLE_TO_INFER_SCHEMA if only the data files did) — either way
-      // the entry is unreadable, which for a fingerprint cache is a
-      // MISS: fall through, recompute, overwrite
-      try Some(spark.read.parquet(dir.toString))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
+      // _SUCCESS probe above and this listing, an entry with no data
+      // file, an empty data file or an unreadable footer all leave the
+      // entry unreadable, which for a fingerprint cache is a MISS: fall
+      // through, recompute, overwrite
+      StateRead.read(spark, Seq(dir.toString))
     } else None
     hit.getOrElse {
       val tmp = new Path(cacheDir, s"_tmp_$key")

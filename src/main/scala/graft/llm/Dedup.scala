@@ -77,27 +77,14 @@ object DedupOps {
 
   /** MinHash signature: sig[s] = min over shingles of xxhash64(shingle, s),
     * s = 0..numHashes-1. (HOF form — kept for array-typed callers; the
-    * LSH pipe uses the relational [[minhashPermutations]] instead, which
-    * whole-stage-codegens.)
+    * LSH pipes use [[minhashSignatureLinear]] instead, a codegen kernel.)
     */
   def minhashSignature(shingles: Column, numHashes: Int): Column =
     arrTransform(sequence(lit(0), lit(numHashes - 1)),
       s => array_min(arrTransform(shingles, x => xxhash64(x, s))))
 
-  /** The `numHashes` MinHash re-hashes of one shingle-hash value as plain
-    * columns, for feeding through `min(...)` aggregates. Classic linear
-    * permutations pi_s(x) = (a_s*x + b_s) mod p over the Mersenne prime
-    * p = 2^31-1 (the construction Spark MLlib's MinHashLSH also uses):
-    * x is first folded to [0, p) so every product stays below 2^62 —
-    * safe under ANSI mode, where a raw mod-2^64 wraparound would raise
-    * ARITHMETIC_OVERFLOW. Coefficients come from a fixed-seed PRNG so
-    * signatures are deterministic across runs/engines. ~64 mul+add+mod
-    * per shingle beats 64 seeded xxhash64 rounds in both codegen and
-    * interpreted paths, and keeps the generated aggregate method small.
-    */
   /** Fixed-seed (a, b) coefficient pairs shared by every minhash surface
-    * (batch relational, streaming array form) so all of them bucket
-    * identically.
+    * (batch and streaming) so all of them bucket identically.
     */
   def minhashCoeffs(numHashes: Int): Seq[(Long, Long)] = {
     val rnd = new scala.util.Random(0x5eed5eed)
@@ -109,18 +96,16 @@ object DedupOps {
 
   val MinhashPrime: Long = 2147483647L // 2^31 - 1
 
-  def minhashPermutations(h: Column, numHashes: Int): Seq[Column] = {
-    val p = MinhashPrime
-    val hp = pmod(h, lit(p))
-    minhashCoeffs(numHashes).map { case (a, b) =>
-      pmod(hp * lit(a) + lit(b), lit(p))
-    }
-  }
-
-  /** Array-form minhash signature over a shingle-hash array, same linear
-    * permutations (and therefore the same buckets) as
-    * [[minhashPermutations]] — for map-only contexts (a stream row) where
-    * the relational explode+groupBy form would be a stateful aggregate.
+  /** Array-form MinHash signature over a shingle-hash array, one
+    * codegen pass per row. Classic linear permutations
+    * pi_s(x) = (a_s*x + b_s) mod p over the Mersenne prime p = 2^31-1
+    * (the construction Spark MLlib's MinHashLSH also uses): x is first
+    * folded to [0, p) so every product stays below 2^62 — safe under
+    * ANSI mode, where a raw mod-2^64 wraparound would raise
+    * ARITHMETIC_OVERFLOW. Coefficients come from [[minhashCoeffs]], so
+    * signatures are deterministic across runs and engines. Slot s is the
+    * min of pi_s over the non-null elements; an empty or null array gives
+    * all-null slots.
     */
   def minhashSignatureLinear(sh: Column, numHashes: Int): Column = {
     // one-pass codegen'd signature — same permutations, same min, same
@@ -315,59 +300,77 @@ object DedupOps {
   }
 
   /** MinHash signature base + band buckets of one corpus: returns
-    * (base = (id, sh shingle-hash array), banded = (id, band, bh)), both
-    * eagerly materialized — base feeds the signature aggregate and the
-    * candidate fetch joins; banded feeds both sides of a band join
-    * (where a broadcast side defeats ReusedExchange). Permutation
-    * coefficients come from a fixed seed, so two calls (e.g. the two
-    * corpora of [[CrossCorpusMinHashPipe]]) bucket IDENTICALLY.
+    * (base = (id, sh shingle-hash array), banded = (id, n, band, bh)),
+    * both eagerly materialized — base feeds the candidate fetch joins;
+    * banded feeds both sides of a band join. Permutation coefficients
+    * come from a fixed seed, so two calls (e.g. the two corpora of
+    * [[CrossCorpusMinHashPipe]]) bucket IDENTICALLY.
     *
-    * With `cacheDir` set, both frames persist through [[CachedStage]]
-    * keyed by the SOURCE's plan fingerprint + the signature parameters —
-    * the reference's cross-run memoization applied to the expensive
-    * stage: re-running dedup (or contamination checks against a fixed
-    * corpus) skips shingling and signature aggregation entirely.
+    * Map-only: each row's signature is one codegen pass over its own
+    * shingle array ([[minhashSignatureLinear]]: the same linear
+    * permutations and the same min as the relational explode +
+    * `groupBy(id)` + `min` form it replaced, which the specs keep as an
+    * oracle), `n` is `size(sh)`, and a row with no shingle yields no band
+    * rows, as the explode did. Ids are expected unique: with a duplicated
+    * id every row gets its own signature and band rows, where the grouped
+    * form built one signature over the union of their shingles. A null
+    * id gives no pair in either form (the band joins compare ids).
+    *
+    * Without `cacheDir` one `localCheckpoint(true)` of (id, sh, n, band
+    * hashes) yields both frames. With it, both frames persist through
+    * [[CachedStage]] keyed by the SOURCE's plan fingerprint + the
+    * signature parameters + the producing plan — the reference's
+    * cross-run memoization applied to the expensive stage: re-running
+    * dedup (or contamination checks against a fixed corpus) skips
+    * shingling and signatures entirely.
     */
   def minhashBanded(
       src: DataFrame, textCol: String, idCol: String,
       numHashes: Int, bands: Int, shingleSize: Int,
       cacheDir: Option[String] = None): (DataFrame, DataFrame) = {
-    val r = numHashes / bands
-    def materialize(tag: String, df: => DataFrame): DataFrame = cacheDir match {
-      case Some(dir) =>
-        // The third component fingerprints the PRODUCING PLAN (shingle /
-        // permutation expressions included), so an edit to the kernel —
-        // not just the parameters — forks the key instead of silently
-        // serving a stale persisted stage (ADVICE r12).
-        val frame = df
-        val key = graft.core.Fingerprint.combine(
-          graft.pipes.DatasetFingerprint.of(src),
-          graft.core.Fingerprint.hash(
-            s"minhash:$tag:$textCol:$idCol:$numHashes:$bands:$shingleSize"),
-          graft.pipes.DatasetFingerprint.of(frame))
-        graft.core.CachedStage(src.sparkSession, dir, key)(frame)
-      case None => df.localCheckpoint(true)
-    }
     val slim = src.select(
       Pipe.qcol(idCol).cast("long").as("id"), Pipe.qcol(textCol).as("__text__"))
-    val base = materialize("base", Pipe.widen(slim)
-      .select(col("id"), shingleHashes(col("__text__"), shingleSize).as("sh")))
-    val perms = minhashPermutations(col("h"), numHashes)
-    // `n` (shingle-set size, = count of exploded rows since sh is a set)
-    // rides the signature aggregate for free and lets callers prune
-    // candidates on the lossless size-ratio bound BEFORE fetching sets
-    // (tag bumped to v2: the banded schema gained a column and a stale
-    // cache would load without it)
-    val sigs = base.select(col("id"), explode(col("sh")).as("h"))
-      .groupBy("id")
-      .agg(min(perms.head).as("__m0"),
-        (perms.tail.zipWithIndex.map { case (p, i) => min(p).as(s"__m${i + 1}") } :+
-          count(lit(1)).as("n")): _*)
-    val banded = materialize("banded:v2", sigs.select(col("id"), col("n"),
-      posexplode(array((0 until bands).map(b =>
-        xxhash64(lit(b) +: (0 until r).map(j => col(s"__m${b * r + j}")): _*)): _*))
-        .as(Seq("band", "bh"))))
-    (base, banded)
+    val shingled = Pipe.widen(slim)
+      .select(col("id"), shingleHashes(col("__text__"), shingleSize).as("sh"))
+    def withBands(df: DataFrame): DataFrame = df.select(col("id"), col("sh"),
+      size(col("sh")).cast("long").as("n"),
+      bandHashes(minhashSignatureLinear(col("sh"), numHashes), numHashes, bands)
+        .as("__bh__"))
+    def explodeBands(df: DataFrame): DataFrame = df.filter(size(col("sh")) > 0)
+      .select(col("id"), col("n"), posexplode(col("__bh__")).as(Seq("band", "bh")))
+    cacheDir match {
+      case Some(dir) =>
+        def cached(tag: String, frame: DataFrame): DataFrame = {
+          // The third component fingerprints the PRODUCING PLAN (shingle /
+          // signature expressions included), so an edit to the kernel —
+          // not just the parameters — forks the key instead of silently
+          // serving a stale persisted stage (ADVICE r12).
+          val key = graft.core.Fingerprint.combine(
+            graft.pipes.DatasetFingerprint.of(src),
+            graft.core.Fingerprint.hash(
+              s"minhash:$tag:$textCol:$idCol:$numHashes:$bands:$shingleSize"),
+            graft.pipes.DatasetFingerprint.of(frame))
+          graft.core.CachedStage(src.sparkSession, dir, key)(frame)
+        }
+        val base = cached("base", shingled)
+        // (tag v2: the banded schema gained `n`; the producing plan in
+        // the key forks it again for the map-only signature)
+        (base, cached("banded:v2", explodeBands(withBands(base))))
+      case None =>
+        val both = withBands(shingled).localCheckpoint(true)
+        (both.select("id", "sh"), explodeBands(both))
+    }
+  }
+
+  /** The `bands` LSH bucket hashes of a `numHashes`-slot MinHash
+    * signature array: band b hashes its r = numHashes / bands
+    * consecutive slots as `xxhash64(b, sig[b·r], …, sig[b·r + r − 1])`
+    * (the hash skips a null slot, as it does a null column).
+    */
+  def bandHashes(sig: Column, numHashes: Int, bands: Int): Column = {
+    val r = numHashes / bands
+    array((0 until bands).map(b =>
+      xxhash64(lit(b) +: (0 until r).map(j => element_at(sig, b * r + j + 1)): _*)): _*)
   }
 
   /** Cosine similarity in double precision (sequential accumulation). */
@@ -434,14 +437,10 @@ case class MinHashLSHDedupPipe(
     "cacheDir" -> cacheDir.mkString)
 
   protected def transform(df: DataFrame, ks: Seq[String]): DataFrame = {
-    // Relational lowering (same reasoning as the round-3 simhash rewrite):
-    //   1. explode shingle hashes -> (id, h) rows; the signature is 64
-    //      codegen'd min() aggregates over cheap linear permutations of h
-    //      (partial aggregation collapses to one 64-long buffer per doc
-    //      map-side, so the shuffle carries |docs|, not |shingles|, rows).
-    //      The old HOF form (array_min . transform per seed) evaluated a
-    //      seeded xxhash64 per (shingle, seed) INTERPRETED — HOF lambdas
-    //      never whole-stage-codegen.
+    // Shape:
+    //   1. map-only signatures: each doc's 64 linear permutations are
+    //      min-folded over its own shingle array by one codegen kernel
+    //      (MinhashSigExpr), then hashed into band buckets — no shuffle.
     //   2. band-bucket equi-join on (band, bh, id) ONLY — the previous
     //      shape carried both docs' full shingle arrays through the
     //      band explode, putting bands x sum(|sh|) array bytes through
@@ -450,17 +449,12 @@ case class MinHashLSHDedupPipe(
     //      id (two joins against the slim (id, sh) projection) for the
     //      lossless size prune + exact-Jaccard verify.
     //
-    // `base` and `banded` are eagerly localCheckpoint-ed (the same device
-    // connectedComponents uses): base feeds THREE consumers (the signature
-    // aggregate and both candidate fetch joins) and banded TWO (both sides
-    // of the band self-join, where the broadcast side defeats
-    // ReusedExchange). Without materialization each consumer re-runs the
-    // interpreted shingle HOF from the file scan — and the generator's
-    // inferred size(sh)>0 / isnotnull(sh) filter re-evaluates that same
-    // expression per row BEFORE the project, so the r4 plan paid the
-    // shingle pass ~8x. Checkpointed, each heavy pass runs exactly once
-    // over numeric-only rows ((id, long[]) ~ 8B/shingle, smaller than the
-    // text it came from; banded is 3 longs x bands per doc).
+    // `base` and `banded` are eagerly materialized (one localCheckpoint
+    // without a cacheDir): base feeds both candidate fetch joins and
+    // banded both sides of the band self-join. Without it each consumer
+    // re-runs the shingle pass from the file scan. Materialized, the
+    // heavy pass runs exactly once over numeric-only rows ((id, long[])
+    // ~ 8B/shingle, smaller than the text it came from).
     val (base, banded) = DedupOps.minhashBanded(
       df, textCol, idCol, numHashes, bands, shingleSize, cacheDir)
     // lossless size prune AT the band join — jaccard <=
@@ -952,8 +946,8 @@ object SRPCosineDedupPipe {
   * permutations, so recall matches single-corpus [[MinHashLSHDedupPipe]]:
   * P(miss) = (1 - j^r)^b.
   *
-  * Scale shape: each side shuffles |docs| signature rows once; the band
-  * join carries 3 longs x bands per doc; only surviving candidate pairs
+  * Scale shape: each side's signatures are map-only; the band join
+  * carries 3 longs x bands per doc; only surviving candidate pairs
   * fetch shingle sets back by id. The eval side is typically tiny next to
   * the train side — AQE broadcasts its banded frame, making the train
   * side's candidate generation map-only.

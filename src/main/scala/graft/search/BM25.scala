@@ -173,16 +173,15 @@ case class BM25Engine(
     val postingsAll = persisted("postings")(postingsRaw)
     val dfreqAll = persisted("dfreq")(
       postingsAll.groupBy("term").agg(countDistinct("docId").as("df")))
-    val totals = docs.agg(count(lit(1)).as("n"), avg("len").as("avgdl"))
-      .collect()(0)
+    val (n, avgdl) = BM25Stats.totals(docs)
     val (postings, dfreq) = maxDfFraction match {
       case Some(frac) =>
-        val cut = frac * totals.getLong(0)
+        val cut = frac * n
         val kept = dfreqAll.filter(col("df") <= cut)
         (postingsAll.join(kept.select("term"), Seq("term"), "left_semi"), kept)
       case None => (postingsAll, dfreqAll)
     }
-    BM25Stats(postings, dfreq, docs, totals.getLong(0), totals.getDouble(1))
+    BM25Stats(postings, dfreq, docs, n, avgdl)
   }
 
   /** Deletion on the standing index: a new engine whose statistics are
@@ -382,8 +381,17 @@ object BM25Stats {
       .select(col("term"),
         (coalesce(col("__dfa__"), lit(0L)) + coalesce(col("__dfb__"), lit(0L))).as("df"))
     val docs = a.docs.unionByName(b.docs)
-    val totals = docs.agg(count(lit(1)).as("n"), avg("len").as("avgdl")).collect()(0)
-    BM25Stats(postings, dfreq, docs, totals.getLong(0), totals.getDouble(1))
+    val (n, avgdl) = totals(docs)
+    BM25Stats(postings, dfreq, docs, n, avgdl)
+  }
+
+  /** `(n, avgdl)` of a docs frame. With no token anywhere (an empty
+    * corpus, only null texts, or no surviving doc) the average is null,
+    * read as avgdl 0.
+    */
+  private[search] def totals(docs: DataFrame): (Long, Double) = {
+    val r = docs.agg(count(lit(1)), avg("len")).collect()(0)
+    (r.getLong(0), if (r.isNullAt(1)) 0d else r.getDouble(1))
   }
 
   /** Deletion — the inverse of [[merge]], and exact for the same reason
@@ -437,10 +445,8 @@ object BM25Stats {
         (col("df") - coalesce(col("__dfrm__"), lit(0L))).as("df"))
       .filter(col("df") > 0)
     val docs = a.docs.filter(!rm)
-    val totals = docs.agg(count(lit(1)).as("n"), avg("len").as("avgdl")).collect()(0)
-    val n = totals.getLong(0)
-    BM25Stats(postings, dfreq, docs,
-      n, if (n == 0) 0d else totals.getDouble(1))
+    val (n, avgdl) = totals(docs)
+    BM25Stats(postings, dfreq, docs, n, avgdl)
   }
 
   /** Unresolved attribute names a predicate references (best-effort:

@@ -1,8 +1,9 @@
 package graft.search
 
 import graft.core.Pipe.qcol
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 import scala.collection.immutable.ArraySeq
 
 /** S2 brute-force dense search (reference `TorchVectorBase`,
@@ -305,10 +306,11 @@ case class IVFDenseEngine(
   /** `centroids` = (cid, centroid array<double>); `taggedOwn` = the tag
     * of THIS engine's `corpus` only (what the incremental fine quantizer
     * of [[IVFPQDenseEngine]] encodes); `tagged` = taggedOwn plus any
-    * `baseTagged` — the full index. With `stateDir` each frame is
-    * fingerprint-cached parquet, and the KMeans fit runs only on a
-    * centroids cache miss (`trained` is lazy and only forced inside that
-    * compute closure).
+    * `baseTagged` — the full index. With `stateDir` the trained
+    * centroids and `taggedOwn` are fingerprint-cached parquet, and the
+    * KMeans fit runs only on a centroids cache miss (`trained` is lazy
+    * and only forced inside that compute closure); pinned centroids are
+    * never persisted (see [[build]]).
     */
   lazy val (centroids: DataFrame, taggedOwn: DataFrame, tagged: DataFrame) =
     build()
@@ -343,6 +345,14 @@ case class IVFDenseEngine(
       .clusterCenters.map(_.toArray.toSeq).toSeq
   }
 
+  /** `(centroids, taggedOwn, tagged)` — see the lazy val above. With
+    * `stateDir`, trained centroids and the tag of `corpus` persist as
+    * fingerprint-cached entries. Pinned `fixedCentroids` (every
+    * [[addVectors]] / [[removeVectors]] copy pins them) come back as a
+    * local frame with no Spark job and no entry: they are a parameter of
+    * the engine, already hashed into its state key, so an entry would
+    * hold nothing new.
+    */
   def build(): (DataFrame, DataFrame, DataFrame) = {
     val spark = corpus.sparkSession
     def persisted(frame: String)(compute: => DataFrame): DataFrame =
@@ -352,16 +362,12 @@ case class IVFDenseEngine(
             buildStateKey(corpusFingerprint, frame))(compute)
         case None => compute
       }
-    val centsDf = persisted("centroids") {
-      val cents = fixedCentroids match {
-        case Some(c) =>
-          require(c.size == nlist,
-            s"fixedCentroids must have nlist=$nlist rows (got ${c.size})")
-          c
-        case None => trained
-      }
-      spark.createDataFrame(
-        cents.zipWithIndex.map { case (v, i) => (i, v) }).toDF("cid", "centroid")
+    val centsDf = fixedCentroids match {
+      case Some(c) =>
+        require(c.size == nlist,
+          s"fixedCentroids must have nlist=$nlist rows (got ${c.size})")
+        IVFDenseEngine.centroidFrame(spark, c)
+      case None => persisted("centroids")(IVFDenseEngine.centroidFrame(spark, trained))
     }
     val taggedDf = persisted("tagged") {
       // argmin-L2 tagging as pure expressions, lowest-cid tie-break —
@@ -426,6 +432,16 @@ case class IVFDenseEngine(
 }
 
 object IVFDenseEngine {
+  /** `(cid, centroid)` rows in cid order, with the schema a persisted
+    * centroids entry reads back with (every field nullable), so a pinned
+    * frame and a persisted one plan and serve alike.
+    */
+  private def centroidFrame(spark: SparkSession, cents: Seq[Seq[Double]]): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(cents.zipWithIndex.map { case (v, i) => Row(i, v) }: _*),
+      StructType(Seq(StructField("cid", IntegerType),
+        StructField("centroid", ArrayType(DoubleType)))))
+
   private def collectCentroids(centroids: DataFrame): Seq[Seq[Double]] =
     centroids.orderBy("cid").collect()
       .map(r => r.getSeq[Double](1).toIndexedSeq: Seq[Double]).toIndexedSeq

@@ -51,7 +51,7 @@ object StreamingCountMin {
 
   /** The accumulated sketch frame `(j, bucket, cnt)`. None before seed. */
   def latest(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    pointer(spark, stateDir).map(v => spark.read.parquet(s"$stateDir/$v"))
+    pointer(spark, stateDir).map(v => graft.core.StateRead(spark, s"$stateDir/$v"))
 
   private[graft] def applyBatch(
       batch: DataFrame, id: Long, stateDir: String, textCol: String,
@@ -71,7 +71,7 @@ object StreamingCountMin {
       batch, textCol, ngramSize)
     val batchSketch = graft.llm.CountMinOps.sketch(occ, "__hh_h__",
       depth, width)
-    val cur = spark.read.parquet(s"$stateDir/$curName")
+    val cur = graft.core.StateRead(spark, s"$stateDir/$curName")
     commit(graft.llm.CountMinOps.merge(cur, batchSketch), stateDir, s"v$id")
   }
 

@@ -94,7 +94,6 @@ object StreamingNearDedup {
       shingleSize: Int = 3,
       jaccardThreshold: Double = 0.5): Dataset[Pair] = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
     val ops = graft.llm.DedupOps
     val wm0 = if (df.isStreaming) df.withWatermark(tsCol, watermark) else df
     // spread the interpreted per-row signature work (shingles + 64
@@ -113,9 +112,7 @@ object StreamingNearDedup {
       .withColumn("sig", ops.minhashSignatureLinear(col("sh"), numHashes))
     val banded = staged.select(
       col("id"), col("tsMicros"), col("ts"), col("sh"),
-      posexplode(array((0 until bands).map(b =>
-        xxhash64(lit(b) +: (0 until r).map(j =>
-          element_at(col("sig"), b * r + j + 1)): _*)): _*))
+      posexplode(ops.bandHashes(col("sig"), numHashes, bands))
         .as(Seq("band", "bh")))
       .select("band", "bh", "id", "sh", "tsMicros", "ts")
 
@@ -213,7 +210,6 @@ object StreamingCorpusDedup {
       jaccardThreshold: Double = 0.5,
       cacheDir: Option[String] = None): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
     val ops = graft.llm.DedupOps
     // static side: identical build (and cache keys) as the batch pipes —
     // dd_incremental's corpus state and this stream's corpus state are
@@ -221,8 +217,8 @@ object StreamingCorpusDedup {
     val (baseC, bandedC) = ops.minhashBanded(
       corpus, corpusTextCol, corpusIdCol, numHashes, bands, shingleSize, cacheDir)
     // stream side: per-row shingles + linear-permutation signature (the
-    // same fixed coefficients minhashBanded's exploded aggregate uses,
-    // so both sides bucket identically); spread the interpreted HOF work
+    // same kernel and band hashes minhashBanded uses, so both sides
+    // bucket identically); spread the interpreted HOF work
     // past the source's file splits
     val widened =
       if (stream.isStreaming) stream
@@ -233,9 +229,7 @@ object StreamingCorpusDedup {
       .withColumn("__sig__", ops.minhashSignatureLinear(col("sh_a"), numHashes))
     val bandedS = staged.select(
       col("id_a"), col("sh_a"),
-      posexplode(array((0 until bands).map(b =>
-        xxhash64(lit(b) +: (0 until r).map(j =>
-          element_at(col("__sig__"), b * r + j + 1)): _*)): _*))
+      posexplode(ops.bandHashes(col("__sig__"), numHashes, bands))
         .as(Seq("band", "bh")))
     val na = size(col("sh_a")).cast("double")
     val nb = col("n_b").cast("double")

@@ -75,7 +75,7 @@ object PartitionedUpsert {
     val version = StreamingUpsert.pointer(spark, flatDir).getOrElse(
       throw new IllegalStateException(
         s"seedFromFlat: no _LATEST under flat state dir $flatDir"))
-    val base = spark.read.parquet(s"$flatDir/$version")
+    val base = graft.core.StateRead(spark, s"$flatDir/$version")
     val written = stagePartitions(
       base.withColumn("__part__", partCol(keys, n)), stateDir, version)
     writeManifest(spark, stateDir,
@@ -116,15 +116,21 @@ object PartitionedUpsert {
     * files untouched on disk.
     *
     * The batch is evaluated once: after the replay and behind-id guards
-    * it is materialized with `localCheckpoint(true)`, and the
-    * touched-partition collect, the merge's reads of the change set (its
-    * keys, its duplicate-key verdict, its upserts) and the staged write
-    * all read that one frame. Without it each of them re-runs the
-    * batch's whole lineage — and a nondeterministic producer could give
-    * the collect and the merge different rows. Not `persist()`: a cached
-    * plan keeps its pre-AQE shuffle partitioning, while a checkpoint
-    * keeps the coalesced partitions AQE chose, so the staged write's file
-    * layout does not change. A replayed id returns before any Spark job.
+    * it is materialized with `localCheckpoint(true)`, and the merge's
+    * reads of the change set (its keys, its duplicate-key verdict, its
+    * upserts) and the staged write all read that one frame. The touched
+    * partitions are observed (`collect_set` of the bucket through an
+    * [[org.apache.spark.sql.Observation]]) in that same checkpoint pass,
+    * so the partition set and the merge read one materialization by
+    * construction and no job of its own computes the set. Without the
+    * checkpoint each consumer re-runs the batch's whole lineage. Not
+    * `persist()`: a cached plan keeps its pre-AQE shuffle partitioning,
+    * while a checkpoint keeps the coalesced partitions AQE chose, so the
+    * staged write's file layout does not change. The current versions
+    * of the touched partitions are read through [[graft.core.StateRead]]
+    * (no schema-inference job), so the commit runs the checkpoint and
+    * the staged write and nothing else. A replayed id returns before any
+    * Spark job.
     */
   private[graft] def applyBatch(
       batch: DataFrame,
@@ -141,17 +147,18 @@ object PartitionedUpsert {
         s"$stateDir — a restarted stream with a fresh checkpoint dir cannot " +
         "resume an existing state dir; reuse the original checkpointLocation " +
         "or seed a new stateDir")
-    val changes = batch.localCheckpoint(true)
     val pc = partCol(keys, m.n)
-    // the touched-partition set is bounded by n — a driver-side collect
-    // of at most n ints, never data rows
-    val touched = changes.select(pc.as("__part__")).distinct()
-      .collect().map(_.getInt(0)).toSet
+    // the touched-partition set is bounded by n — at most n ints ride
+    // the checkpoint job's observed metrics, never data rows
+    val parts = new org.apache.spark.sql.Observation()
+    val changes = batch.observe(parts, collect_set(pc).as("touched"))
+      .localCheckpoint(true)
+    val touched = parts.get("touched").asInstanceOf[scala.collection.Seq[Int]].toSet
     val curPaths = touched.toSeq.sorted.collect {
       case i if m.parts.contains(i) => s"$stateDir/p$i/${m.parts(i)}"
     }
     val cur =
-      if (curPaths.nonEmpty) spark.read.parquet(curPaths: _*)
+      if (curPaths.nonEmpty) graft.core.StateRead(spark, curPaths: _*)
       else deleteCol.fold(changes)(c => changes.drop(c)).limit(0)
     val merged = graft.operators.UpsertMerge(cur, changes, keys, deleteCol)
     val written = stagePartitions(
@@ -170,7 +177,7 @@ object PartitionedUpsert {
   def latest(spark: SparkSession, stateDir: String): Option[DataFrame] =
     readManifest(spark, stateDir).flatMap { m =>
       if (m.parts.isEmpty) None
-      else Some(spark.read.parquet(
+      else Some(graft.core.StateRead(spark,
         m.parts.toSeq.sortBy(_._1).map { case (i, v) => s"$stateDir/p$i/$v" }: _*))
     }
 
@@ -233,7 +240,7 @@ object PartitionedUpsert {
     require(missing.isEmpty,
       s"manifest '$version' references vacuumed partition versions: " +
         missing.map { case (i, v) => s"p$i/$v" }.mkString(", "))
-    spark.read.parquet(
+    graft.core.StateRead(spark,
       m.parts.toSeq.sortBy(_._1).map { case (i, v) => s"$stateDir/p$i/$v" }: _*)
   }
 

@@ -141,7 +141,7 @@ object StreamingUpsert {
             "seedFromFlat, O(touched partitions) per batch), or pass " +
             "allowFullRewrite=true to accept the O(table)-per-batch cost")
       }
-      val cur = spark.read.parquet(s"$stateDir/$curName")
+      val cur = graft.core.StateRead(spark, s"$stateDir/$curName")
       val merged = graft.operators.UpsertMerge(cur, batch, keys, deleteCol,
         allowNewColumns = allowNewColumns)
       commit(merged, stateDir, s"v$id")
@@ -162,7 +162,7 @@ object StreamingUpsert {
 
   /** The current table: the version the `_LATEST` pointer names. */
   def latest(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    pointer(spark, stateDir).map(v => spark.read.parquet(s"$stateDir/$v"))
+    pointer(spark, stateDir).map(v => graft.core.StateRead(spark, s"$stateDir/$v"))
 
   /** The version name `_LATEST` points at; an absent OR empty pointer
     * reads as None (an empty read can only mean a torn legacy in-place
@@ -202,7 +202,7 @@ object StreamingUpsert {
     require(versions(spark, stateDir).contains(version),
       s"version '$version' not present under $stateDir " +
         s"(have: ${versions(spark, stateDir).mkString(", ")})")
-    spark.read.parquet(s"$stateDir/$version")
+    graft.core.StateRead(spark, s"$stateDir/$version")
   }
 
   /** Time-travel DIFF between two committed versions: one row per key

@@ -78,14 +78,14 @@ object StreamingWeightedSample {
       val tmp = path(s"$stateDir/_staging")
       if (fs.exists(path(s"$stateDir/_staging/_SUCCESS")) &&
           fs.rename(tmp, cur)) {
-        Some(spark.read.parquet(cur.toString))
+        Some(graft.core.StateRead(spark, cur.toString))
       } else if (fs.exists(cur)) {
         // the rename lost a race: a concurrent latest() (or commit's
         // rename) won the delete-then-rename window — _CURRENT exists
         // now, so read it rather than wrongly reporting "never seeded"
-        Some(spark.read.parquet(cur.toString))
+        Some(graft.core.StateRead(spark, cur.toString))
       } else None
-    } else Some(spark.read.parquet(cur.toString))
+    } else Some(graft.core.StateRead(spark, cur.toString))
   }
 
   private[graft] def applyBatch(

@@ -15,6 +15,20 @@ class BM25IncrementalSpec extends SparkSpec {
   private val cfg = SearchConfig(k = 4, fillMaskedIndices = false,
     queryIdCol = Some("qid"))
 
+  test("a corpus with no token (all-null or empty texts) builds; a query finds no document") {
+    val allNull = Seq((0L, null: String), (1L, null: String)).toDF("idx", "text")
+    val qs = Seq((100L, "spark joins")).toDF("qid", "q")
+      .select(col("qid"), col("q").as("query.text"))
+    for ((name, docs) <- Seq("all-null" -> allNull, "empty" -> allNull.limit(0))) {
+      val e = BM25Engine(docs, cfg)
+      assert(e.stats.avgdl == 0d, name)
+      // nothing but the masked padding to k: idx -1, score -Infinity
+      val got = e(qs).select(qcol("index.idx"), qcol("index.score")).collect()
+      assert(got.map(r => (r.getSeq[Long](0), r.getSeq[Double](1))).toSeq ==
+        Seq((Seq.fill(cfg.k)(-1L), Seq.fill(cfg.k)(Double.NegativeInfinity))), name)
+    }
+  }
+
   test("merged halves reproduce the full-rebuild statistics exactly") {
     val full = BM25Engine(corpus, cfg).stats
     val merged = BM25Stats.merge(

@@ -162,6 +162,23 @@ class PartitionedUpsertSpec extends SparkSpec {
       (i, if (i == 3L) 30.5 else i * 1.0)) :+ ((40L, 400.0)))
   }
 
+  test("latest reads with no Spark job; applyBatch runs only its checkpoint and staged write") {
+    val dir = java.nio.file.Files.createTempDirectory("pups-jobs").toString
+    val base = (1L to 64L).map(i => (i, i * 1.0)).toDF("k", "v")
+    PartitionedUpsert.seed(base, s"$dir/t", Seq("k"), n = 4)
+    val (table, readJobs) = graft.Jobs.during(spark)(PartitionedUpsert.latest(spark, s"$dir/t").get)
+    assert(readJobs.isEmpty, readJobs)
+    assert(table.count() == 64)
+    val changes = spark.sparkContext.parallelize(Seq((3L, 30.5), (70L, 7.0)), 2).toDF("k", "v")
+    val (_, jobs) = graft.Jobs.during(spark)(
+      PartitionedUpsert.applyBatch(changes, 0, s"$dir/t", Seq("k"), None))
+    // every job belongs to the change checkpoint or the staged write
+    val sites = jobs.map(_.sql.map(_.replaceAll(":\\d+$", "")))
+    assert(sites.distinct.sorted == Seq(Some("localCheckpoint at PartitionedUpsert.scala"),
+      Some("parquet at PartitionedUpsert.scala")), jobs)
+    assert(PartitionedUpsert.latest(spark, s"$dir/t").get.count() == 65)
+  }
+
   test("seedFromFlat migrates a flat state dir: identical reads, resumable stream") {
     val dir = java.nio.file.Files.createTempDirectory("pups-mig").toString
     // build a flat table with history: seed + two streamed batches
