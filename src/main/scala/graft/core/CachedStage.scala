@@ -69,7 +69,9 @@ object CachedStage {
       val tmp = new Path(cacheDir, s"_tmp_$key")
       if (fs.exists(tmp)) fs.delete(tmp, true)
       val c = compute
-      c.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      JobLabel(spark, "CachedStage write", key) {
+        c.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+      }
       if (fs.exists(dir)) fs.delete(dir, true)
       fs.rename(tmp, dir)
       // read back with the written frame's schema: the file source makes

@@ -66,6 +66,34 @@ object StateRead {
   def apply(spark: SparkSession, paths: String*): DataFrame =
     read(spark, paths).getOrElse(spark.read.parquet(paths: _*))
 
+  /** The row count of `df` when it is a plain scan of flat parquet files
+    * (a [[CachedStage]] entry, a [[read]] frame): the sum of the footers'
+    * row counts, read on the driver with no Spark job, one file after
+    * another until the sum passes `limit` — a count above `limit` is
+    * then a partial sum, so a large entry costs a few footer reads. None
+    * for any other plan, or when a footer cannot be read.
+    */
+  def rowCount(df: DataFrame, limit: Long = Long.MaxValue): Option[Long] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    df.queryExecution.analyzed match {
+      case lr: LogicalRelation => lr.relation match {
+        case fs: HadoopFsRelation if fs.partitionSchema.isEmpty &&
+            fs.fileFormat.isInstanceOf[ParquetFileFormat] =>
+          val conf = df.sparkSession.sparkContext.hadoopConfiguration
+          try {
+            val files = fs.location.listFiles(Nil, Nil).iterator.flatMap(_.files)
+            var n = 0L
+            while (n <= limit && files.hasNext) n +=
+              org.apache.spark.sql.graft.ParquetFooterSchema.rowCount(files.next().fileStatus, conf)
+            Some(n)
+          } catch { case NonFatal(_) => None }
+        case _ => None
+      }
+      case _ => None
+    }
+  }
+
   private def summary(name: String): Boolean =
     name == "_common_metadata" || name == "_metadata"
 

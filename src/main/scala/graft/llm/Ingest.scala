@@ -2,8 +2,9 @@ package graft.llm
 
 import graft.core.Pipe
 import graft.pipes.{LambdaPipe, SequentialPipe}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The FLAGSHIP end-to-end ingest preset — the reference's canonical
@@ -30,13 +31,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * from the index), and the DuckDB oracle replays the whole cascade
   * stage by stage from the raw fixtures.
   *
-  * Scale shape: clean/embed are map-only; dedup is the banded join with
-  * corpus-side state cached by fingerprint; the index add never touches
-  * the standing lists, and the commit rows come from the add's own tag
-  * and encode stages; the upsert rewrites O(touched partitions). No
-  * stage shuffles the standing corpus. [[run]] materializes the cleaned
-  * and the deduplicated batch once each, so the batch's lineage runs
-  * once per ingest, not once per consumer.
+  * Scale shape: clean/embed are map-only; dedup serves the batch against
+  * the corpus's cached band index (collected once per ingest) and keeps
+  * the banded join above its cap; the index add never touches the
+  * standing lists, and the commit rows are one projection over the
+  * embedded batch — the add's tag, residual and encode as per-row
+  * kernels of the pinned centroids and codebooks; the upsert rewrites
+  * O(touched partitions) without shuffling them. No stage shuffles the
+  * standing corpus. [[run]] materializes the cleaned batch once, so the
+  * batch's lineage runs once per ingest, not once per consumer.
   */
 object IngestPreset {
 
@@ -99,22 +102,34 @@ object IngestPreset {
       stateDir = Some(s"$cacheDir/ingest-ivfpq"),
       corpusFingerprint = corpusFp)
 
-  /** Shape (cleaned + embedded + index-tagged) rows into the table
-    * schema: (doc_id, text, ws_tokens, vector, cid, codes). The vector
+  /** Shape embedded rows into the table schema (doc_id, text, ws_tokens,
+    * vector, cid, codes), with the cell and codes `eng` gives each vector
+    * ([[graft.search.IVFPQDenseEngine.quantized]]: one projection, the
+    * rows its tagged and codes state holds for the same ids). The vector
     * is stored FIXED-POINT e4 (floor(x·10⁴ + 0.5) as long): `round(x,4)`
     * is engine-ambiguous on .00005 boundaries (the r12 find — Spark
     * rounds the shortest-decimal, DuckDB the binary value; one sf1
     * component landed exactly there), while floor over the identical
     * binary double replays bit-for-bit in any engine.
     */
-  private def tableRows(withVec: DataFrame, tagged: DataFrame): DataFrame =
-    withVec
-      .join(tagged.withColumnRenamed("idx", "doc_id"), Seq("doc_id"))
+  private def tableRows(eng: graft.search.IVFPQDenseEngine, withVec: DataFrame): DataFrame =
+    eng.quantized(withVec.filter(col("doc_id").isNotNull), col("vector"))
       .select(col("doc_id"), col("text"), col("ws_tokens"),
         transform(col("vector"),
           v => floor(v * 10000 + 0.5).cast("long")).as("vector"),
-        col("cid").cast("int").as("cid"),
-        array((0 until m).map(j => col(s"__c$j").cast("int")): _*).as("codes"))
+        col("cid"),
+        array((0 until m).map(j => col(s"__c$j")): _*).as("codes"))
+
+  /** The base index over the corpus vectors with its state written: the
+    * tagged lists and codes every ingest's add appends to.
+    */
+  private def persistedBase(vec: DataFrame, cacheDir: String,
+      corpusFp: String): graft.search.IVFPQDenseEngine = {
+    val base = indexBase(vec, cacheDir, corpusFp)
+    base.ivf.tagged
+    base.pq.codes
+    base
+  }
 
   /** Seed the standing state from an already-crawled corpus: clean,
     * embed, build the base index, and write the partitioned table.
@@ -125,9 +140,9 @@ object IngestPreset {
     val clean = cleaner(corpusRaw.select("doc_id", "text"))
       .select("doc_id", "text", "ws_tokens")
     val vec = embed(clean, cacheDir, s"$corpusFp:corpus-embed")
-    val base = indexBase(vec, cacheDir, corpusFp)
+    val base = persistedBase(vec, cacheDir, corpusFp)
     graft.streaming.PartitionedUpsert.seed(
-      tableRows(vec, base.taggedCodes), tableDir, Seq("doc_id"), nParts)
+      tableRows(base, vec), tableDir, Seq("doc_id"), nParts)
     clean
   }
 
@@ -177,9 +192,9 @@ object IngestPreset {
         if (graft.streaming.PartitionedUpsert
             .readManifest(spark, tableDir).isEmpty) {
           val vec = embed(clean, cacheDir, s"$corpusFp:corpus-embed")
-          val base = indexBase(vec, cacheDir, corpusFp)
+          val base = persistedBase(vec, cacheDir, corpusFp)
           graft.streaming.PartitionedUpsert.seed(
-            tableRows(vec, base.taggedCodes), tableDir, Seq("doc_id"), nParts)
+            tableRows(base, vec), tableDir, Seq("doc_id"), nParts)
         }
       } finally graft.streaming.WriterLock.release(spark, tableDir, token)
     }
@@ -195,16 +210,22 @@ object IngestPreset {
     * so the signature cache stays warm — [[seed]] returns exactly it).
     *
     * The batch's lineage runs once: `clean` is materialized right after
-    * the cleaner and `unique` right after the dedup anti-join, each with
-    * `localCheckpoint(true)`. Without them every consumer re-runs the
-    * cleaner chain and the banded dedup join — the batch signatures, the
-    * embed cache write, the index tag and encode, the commit rows, and
-    * the commit's own reads of its change set. Not `persist()`: a cached
-    * plan keeps its pre-AQE shuffle partition count, which spreads the
-    * op's cache entries (vectors, tags, codes) over more, smaller files,
-    * while a checkpoint keeps the coalesced partitioning AQE chose. The
-    * manifest is read first: a REPLAYED batch id (already committed)
-    * materializes nothing, and its frames stay lazy.
+    * the cleaner with `localCheckpoint(true)` (job label `IngestPreset
+    * clean`). Not `persist()`: a cached plan keeps its pre-AQE shuffle
+    * partition count, which spreads the op's cache entries over more,
+    * smaller files, while a checkpoint keeps the coalesced partitioning
+    * AQE chose. Dedup then runs served
+    * ([[IncrementalMinHashDedupPipe.servedPairs]]: one collect of the
+    * batch's signatures, one of the corpus's cached band index), and
+    * `unique` is a map-only filter of `clean` by the dropped ids. Above
+    * the served cap the banded join decides, and `unique` (its
+    * anti-join) is checkpointed as well, so the join runs once. The
+    * commit rows are one projection over the embedded batch, and
+    * [[graft.streaming.PartitionedUpsert.applyBatch]] commits them. The
+    * added engine `engine` is lazy: its tagged and codes state is built
+    * when it is first searched. The manifest is read first: a REPLAYED
+    * batch id (already committed) materializes nothing — its dedup is the
+    * lazy join form, and its frames stay lazy.
     */
   def run(newRaw: DataFrame, corpus: DataFrame, tableDir: String,
       cacheDir: String, corpusFp: String, batchFp: String,
@@ -217,31 +238,38 @@ object IngestPreset {
     val spark = newRaw.sparkSession
     val replay = graft.streaming.PartitionedUpsert
       .readManifest(spark, tableDir).exists(_.id == batchId)
-    def once(df: DataFrame): DataFrame =
-      if (replay) df else df.localCheckpoint(true)
-    val clean = once(cleaner(newRaw.select("doc_id", "text"))
+    def once(site: String)(df: DataFrame): DataFrame =
+      if (replay) df
+      else graft.core.JobLabel(spark, s"IngestPreset $site",
+        graft.core.Fingerprint.hash(batchFp))(df.localCheckpoint(true))
+    val clean = once("clean")(cleaner(newRaw.select("doc_id", "text"))
       .select("doc_id", "text", "ws_tokens"))
     // near-dup policy: drop a new page that duplicates the corpus
     // (cross pair lhs) or a smaller-id page of the same batch
-    val pairs = IncrementalMinHashDedupPipe("text", "doc_id",
+    val dedup = IncrementalMinHashDedupPipe("text", "doc_id",
       corpus, "text", "doc_id", jaccardThreshold = 0.5,
-      cacheDir = Some(s"$cacheDir/ingest-minhash"))(clean)
-    val dropped = pairs.select(
-      when(col("pair_src") === "cross", col("id_a"))
-        .otherwise(col("id_b")).as("doc_id")).distinct()
-    val unique = once(clean.join(dropped, Seq("doc_id"), "left_anti"))
+      cacheDir = Some(s"$cacheDir/ingest-minhash"))
+    // a replay commits nothing: its frames stay lazy, so nothing is collected
+    val (dropped, unique) = (if (replay) None else dedup.servedPairs(clean)) match {
+      case Some(pairs) =>
+        val ids = pairs.map(p => if (p.getString(3) == "cross") p.getLong(0) else p.getLong(1))
+          .distinct.sorted
+        val id = col("doc_id").cast("long")
+        (spark.createDataFrame(java.util.Arrays.asList(ids.map(Row(_)): _*),
+          StructType(Seq(StructField("doc_id", LongType)))),
+          if (ids.isEmpty) clean else clean.filter(id.isNull || !id.isin(ids: _*)))
+      case None =>
+        val d = dedup.joined(clean).select(when(col("pair_src") === "cross", col("id_a"))
+          .otherwise(col("id_b")).as("doc_id")).distinct()
+        (d, once("unique")(clean.join(d, Seq("doc_id"), "left_anti")))
+    }
     val newVec = embed(unique, cacheDir, batchFp)
     val corpusVec = embed(corpus, cacheDir, s"$corpusFp:corpus-embed")
     val eng = indexBase(corpusVec, cacheDir, corpusFp)
       .addVectors(newVec.select(col("doc_id").as("idx"), col("vector")),
         fingerprint = batchFp)
-    // the batch's rows from the added engine's OWN tag and codes stages:
-    // never a join over the standing index
     def commit(): Unit = graft.streaming.PartitionedUpsert.applyBatch(
-      tableRows(newVec,
-        eng.ivf.taggedOwn.select("idx", "cid")
-          .join(eng.pq.codesOwn, Seq("idx"))),
-      batchId, tableDir, Seq("doc_id"), None)
+      tableRows(eng, newVec), batchId, tableDir, Seq("doc_id"), None)
     if (replay) {
       // replayed batch id: the upsert's no-op contract — read-only, so
       // no lease is taken (keeps warm identical re-runs lock-free)

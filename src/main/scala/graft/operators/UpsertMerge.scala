@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
 
 /** CDC-style MERGE (upsert + delete) of a change set into a base table —
   * the incremental-refresh primitive a training-data pipeline needs to
@@ -14,13 +15,75 @@ import org.apache.spark.sql.functions._
   *     INSERT` shape, specialised to whole-row replacement.
   *
   * Execution shape: `base ANTI-JOIN changeKeys` + `UNION non-delete
-  * changes`. The anti join broadcasts whenever the change set is small —
-  * the common CDC case — so the 100 TB base side never shuffles; a huge
-  * change set degrades gracefully to one key-partitioned shuffle. This
-  * beats the full-outer-join formulation, which shuffles BOTH sides
-  * unconditionally (full outer cannot broadcast).
+  * changes`. This beats the full-outer-join formulation, which shuffles
+  * BOTH sides unconditionally (full outer cannot broadcast). The
+  * anti-join's build side is the change set's per-key counts, an
+  * aggregate whose size Spark often cannot bound before it runs; the join
+  * then plans as a sort-merge join, and AQE shuffles the base side by key
+  * before it can switch to a broadcast. A caller that knows both sides are
+  * small — [[graft.streaming.PartitionedUpsert.applyBatch]] observes the
+  * change rows in its checkpoint pass and counts the base rows from the
+  * parquet footers — collects the keys and merges through [[local]]
+  * instead: the base side is filtered by the literal keys, never joined
+  * or shuffled.
   */
 object UpsertMerge {
+
+  /** Change rows and base rows up to which [[local]] beats the join plan
+    * in [[graft.streaming.PartitionedUpsert.applyBatch]]: the largest
+    * sizes at which it was measured faster (4 cores, local mode; long
+    * keys, 4 to 8 partitions). It wins by 2–13 % at 100 to 300 change
+    * rows over 150 to 5,000 base rows, ties at 500 change rows over
+    * 2,000, and loses at 1,000 change rows, or at 10,000 base rows and
+    * more (the cause was not profiled).
+    */
+  val LocalKeyRowCap: Long = 300L
+  val LocalBaseRowCap: Long = 5000L
+
+  /** Upserts of `changes`: rows whose delete flag is not set, without the
+    * flag. A null flag is NOT a delete: `!col(c)` is null for null input,
+    * which would silently drop the row from upserts while its key still
+    * removes the base row — a malformed change row would become a silent
+    * delete. coalesce makes null mean "upsert".
+    */
+  private def upsertsOf(changes: DataFrame, deleteCol: Option[String]): DataFrame =
+    deleteCol.fold(changes)(c => changes.filter(!coalesce(col(c), lit(false))).drop(c))
+
+  /** The merge [[apply]] computes (without schema evolution), split as
+    * `(kept base rows, upserts)` for a caller that lays the rows out
+    * itself, when the caller holds `changeKeys` on the driver: the key
+    * columns of every change row, in `keys` order. A base row is kept
+    * unless its key equals a change key — a filter by the literal keys
+    * (a key with a null part matches nothing, as in the anti-join), so
+    * the base side is neither joined nor shuffled, and no job runs for
+    * it. None when a key repeats: [[apply]] then raises at the first
+    * action, with its error.
+    */
+  private[graft] def local(
+      base: DataFrame, changes: DataFrame, keys: Seq[String],
+      deleteCol: Option[String], changeKeys: Seq[Row]): Option[(DataFrame, DataFrame)] =
+    if (changeKeys.distinct.size != changeKeys.size ||
+        keys.exists(k => changes.schema(changes.schema.fieldIndex(k)).dataType match {
+          case _: ArrayType | _: MapType | _: StructType => true
+          case _ => false
+        })) None
+    else {
+      val upserts = upsertsOf(changes, deleteCol)
+      require(base.columns.toSet == upserts.columns.toSet,
+        "change schema must match base schema (plus the optional delete flag); " +
+          s"base=${base.columns.sorted.mkString(",")} " +
+          s"changes=${upserts.columns.sorted.mkString(",")}")
+      val types = keys.map(k => base.schema(base.schema.fieldIndex(k)).dataType)
+      val lits = changeKeys.filterNot(r => (0 until r.length).exists(r.isNullAt)).map { r =>
+        val parts = keys.indices.map(i => lit(r.get(i)).cast(types(i)).as(keys(i)))
+        if (keys.size == 1) parts.head else struct(parts: _*)
+      }
+      val key = if (keys.size == 1) col(keys.head) else struct(keys.map(col): _*)
+      val kept =
+        if (lits.isEmpty) base
+        else base.filter(keys.map(col(_).isNull).reduce(_ || _) || !key.isin(lits: _*))
+      Some((kept, upserts.select(base.columns.map(col).toIndexedSeq: _*)))
+    }
 
   def apply(
       base: DataFrame,
@@ -35,11 +98,10 @@ object UpsertMerge {
         * verdict the upserts join. The check fires at the FIRST action
         * on the merged frame, also when the base is empty and the
         * optimizer drops the anti-join, and also under `limit`/`show`
-        * while the anti-join's keys are broadcast (the usual small
-        * change set: a broadcast is built whole before any row is read).
-        * With a change set too large to broadcast, a partial action over
-        * a non-empty base can finish on base rows before the guard runs;
-        * a full action cannot. The failure is a
+        * while the anti-join's keys are broadcast (a broadcast is built
+        * whole before any row is read). With a sort-merge anti-join, a
+        * partial action over a non-empty base can finish on base rows
+        * before the guard runs; a full action cannot. The failure is a
         * `org.apache.spark.SparkRuntimeException` with error condition
         * `USER_RAISED_EXCEPTION` (possibly wrapped
         * in a `SparkException` by the failed job), never an
@@ -56,12 +118,7 @@ object UpsertMerge {
         */
       allowNewColumns: Boolean = false): DataFrame = {
     require(keys.nonEmpty, "UpsertMerge needs at least one key column")
-    // null delete flag = NOT a delete: `!col(c)` is null for null input,
-    // which would silently drop the row from upserts while its key still
-    // anti-joins the base row away — a malformed change row would become a
-    // silent delete. coalesce makes null mean "upsert".
-    val upserts = deleteCol.fold(changes)(c =>
-      changes.filter(!coalesce(col(c), lit(false))).drop(c))
+    val upserts = upsertsOf(changes, deleteCol)
     val newCols = upserts.columns.filterNot(base.columns.contains).toSeq
     if (allowNewColumns)
       require(base.columns.forall(upserts.columns.contains),

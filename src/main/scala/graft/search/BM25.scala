@@ -275,7 +275,7 @@ case class BM25Engine(
           filter: _*)
       val filterType = filterKey.map(_ => rows.schema("__filter__").dataType)
       val spark = rows.sparkSession
-      val index = Bm25Index.merge(SearchEngine.serveCollect(this, spark)(
+      val index = Bm25Index.merge(graft.core.JobLabel(spark, s"$name serve", fingerprint)(
         ServeKernels.collectPacked(rows)(Bm25Index.pack(filterType))).toSeq)
       if (index.rows > cap) None
       else Some((spark.sparkContext.broadcast(index), SearchEngine.serveKey(this, rows)))

@@ -370,22 +370,14 @@ case class IVFDenseEngine(
       case None => persisted("centroids")(IVFDenseEngine.centroidFrame(spark, trained))
     }
     val taggedDf = persisted("tagged") {
-      // argmin-L2 tagging as pure expressions, lowest-cid tie-break —
-      // externally replayable. Trained centroids are read back from the
-      // (possibly persisted) centroids frame (one small collect job), so
-      // a half-warm state dir re-tags against the cached centroids and
-      // never re-trains. Cost: O(nlist·d) per row, and the higher-order
-      // functions run interpreted (CodegenFallback), unlike spark.ml's
-      // compiled `predict`.
+      // argmin-L2 tagging, lowest-cid tie-break — externally replayable —
+      // as one codegen kernel per row ([[Quantize.nearest]]). Trained
+      // centroids are read back from the (possibly persisted) centroids
+      // frame (one small collect job), so a half-warm state dir re-tags
+      // against the cached centroids and never re-trains.
       val cents = fixedCentroids.getOrElse(IVFDenseEngine.collectCentroids(centsDf))
-      val v = org.apache.spark.sql.functions.transform(
-        col("__cv__"), _.cast("double"))
-      val dists = org.apache.spark.sql.functions.transform(
-        typedLit(cents), c =>
-          aggregate(zip_with(v, c, (x, y) => (x - y) * (x - y)),
-            lit(0d), (acc, d) => acc + d))
       prepared.select(col("idx") +: col("__cv__") +:
-        (array_position(dists, array_min(dists)) - 1).cast("int").as("cid") +:
+        Quantize.nearest(col("__cv__"), cents).as("cid") +:
         carryCols.map(col): _*)
     }
     // incremental add: the base index is appended OUTSIDE the persisted

@@ -182,19 +182,6 @@ object SearchEngine {
     graft.core.Fingerprint.combine(
       e.fingerprint +: frames.map(graft.pipes.DatasetFingerprint.of): _*)
 
-  /** Run an engine's one-time index collect under the job description
-    * `<engine> serve <fingerprint prefix>` (the prefix as
-    * [[graft.core.Manifest]] prints it), restoring the caller's
-    * description afterwards.
-    */
-  private[search] def serveCollect[T](e: SearchEngine, spark: org.apache.spark.sql.SparkSession)(
-      body: => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(s"${e.name} serve ${e.fingerprint.take(12)}")
-    try body finally sc.setJobDescription(prev)
-  }
-
   /** Dot product of two numeric vectors in double precision, accumulated
     * left-to-right from 0d (matches an engine summing sequentially); null
     * when either side is null, holds a null, or the lengths differ. One

@@ -110,17 +110,8 @@ case class PQDenseEngine(
           "cannot infer vector dim: empty corpus and no fixedCodebooks"))
   }
 
-  /** The corpus with a `raise_error` on every non-null vector whose width
-    * is not [[dim]] — a mismatch fails the first action instead of
-    * encoding silently.
-    */
-  private lazy val checkedCorpus: DataFrame = {
-    val v = qcol(corpusVecCol)
-    corpus.withColumn(corpusVecCol,
-      when(v.isNotNull && size(v) =!= dim, raise_error(concat(
-        lit(s"PQ encode: vector '$corpusVecCol' of width "), size(v).cast("string"),
-        lit(s" in an index of width $dim")))).otherwise(v))
-  }
+  private lazy val checkedCorpus: DataFrame = corpus.withColumn(corpusVecCol,
+    PQDenseEngine.checked(qcol(corpusVecCol), dim, corpusVecCol))
 
   private def persisted(frame: String)(compute: => DataFrame): DataFrame =
     stateDir match {
@@ -150,12 +141,7 @@ case class PQDenseEngine(
     * also used by [[IVFPQDenseEngine]] to rotate queries before ADC.
     */
   def rotated(v: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    rotation match {
-      case Some(r) => arrTransform(typedLit(r), row =>
-        aggregate(zip_with(row, v, (a, b) => a * b.cast("double")),
-          lit(0d), (acc, x) => acc + x))
-      case None => v
-    }
+    PQDenseEngine.rotated(v, rotation)
 
   /** Width-checked corpus with the rotation applied (identity when none). */
   private lazy val rcorpus: DataFrame = rotation match {
@@ -163,18 +149,13 @@ case class PQDenseEngine(
     case None => checkedCorpus
   }
 
-  /** codebooks(j)(c) = sub-centroid as doubles; codes = (idx,
-    * __c0..__c{m-1}) of the full index; `codesOwn` = the codes of THIS
-    * engine's `corpus` only, before any `baseCodes` are appended (the
-    * fine-quantizer twin of [[IVFDenseEngine.taggedOwn]]).
+  /** codebooks(j)(c) = sub-centroid as doubles: the pinned books as given
+    * (no Spark job), or trained ones (loaded from state when persisted).
     */
-  lazy val (codebooks: Seq[Seq[Seq[Double]]], codesOwn: DataFrame, codes: DataFrame) =
-    build()
-
-  private def build(): (Seq[Seq[Seq[Double]]], DataFrame, DataFrame) = {
+  lazy val codebooks: Seq[Seq[Seq[Double]]] = {
     require(dim % m == 0, s"m=$m must divide vector dim=$dim")
     val dsub = dim / m
-    val books = fixedCodebooks match {
+    fixedCodebooks match {
       case Some(b) =>
         require(b.size == m && b.forall(bk =>
           bk.size == codebookSize && bk.forall(_.size == dsub)),
@@ -182,24 +163,22 @@ case class PQDenseEngine(
         b
       case None => loadOrTrainBooks(dsub)
     }
-    // ONE encode path for trained and fixed books: per subspace, squared
-    // L2 to each centroid of the literal codebook, argmin with
-    // first-occurrence (= lowest code) tie-break — the arithmetic an
-    // external engine replays bit-for-bit, the same nearest-centroid rule
-    // the trainer assigns by, and (key for state reload) codes derive
-    // only from the (possibly persisted) books, so cached books encode
-    // without a retrain.
+  }
+
+  /** codes = (idx, __c0..__c{m-1}) of the full index; `codesOwn` = the
+    * codes of THIS engine's `corpus` only, before any `baseCodes` are
+    * appended (the fine-quantizer twin of [[IVFDenseEngine.taggedOwn]]).
+    */
+  lazy val (codesOwn: DataFrame, codes: DataFrame) = build()
+
+  private def build(): (DataFrame, DataFrame) = {
+    // ONE encode path for trained and fixed books, and codes derive only
+    // from the (possibly persisted) books, so cached books encode without
+    // a retrain
     val codesDf = persisted("codes") {
-      rcorpus.select(
-        col(corpusIdxCol).cast("long").as("idx") +:
-          (0 until m).map { j =>
-            val sub = arrTransform(
-              slice(qcol(corpusVecCol), j * dsub + 1, dsub), _.cast("double"))
-            val dists = arrTransform(typedLit(books(j)), c =>
-              aggregate(zip_with(sub, c, (x, y) => (x - y) * (x - y)),
-                lit(0d), (acc, v) => acc + v))
-            (array_position(dists, array_min(dists)) - 1).cast("int").as(s"__c$j")
-          }: _*)
+      corpus.select(col(corpusIdxCol).cast("long").as("idx") +:
+        PQDenseEngine.encode(qcol(corpusVecCol), codebooks, rotation, corpusVecCol)
+          .zipWithIndex.map { case (c, j) => c.as(s"__c$j") }: _*)
     }
     // incremental add: base codes append OUTSIDE the persisted stage, so
     // the cache (and the encode) covers only the new rows
@@ -207,7 +186,7 @@ case class PQDenseEngine(
       case Some(base) => base.unionByName(codesDf)
       case None => codesDf
     }
-    (books, codesDf, withBase)
+    (codesDf, withBase)
   }
 
   /** Per-subspace [[Lloyd]] codebooks (subspace j seeded `kmeansSeed + j`)
@@ -330,6 +309,37 @@ object OPQ {
 }
 
 object PQDenseEngine {
+  /** `v` with a `raise_error` on every non-null vector whose width is not
+    * `dim` — a mismatch fails the first action instead of encoding
+    * silently.
+    */
+  private def checked(v: org.apache.spark.sql.Column, dim: Int,
+      vecName: String): org.apache.spark.sql.Column =
+    when(v.isNotNull && size(v) =!= dim, raise_error(concat(
+      lit(s"PQ encode: vector '$vecName' of width "), size(v).cast("string"),
+      lit(s" in an index of width $dim")))).otherwise(v)
+
+  /** `v` times the rotation matrix (identity when none). */
+  private def rotated(v: org.apache.spark.sql.Column,
+      rotation: Option[Seq[Seq[Double]]]): org.apache.spark.sql.Column =
+    rotation match {
+      case Some(r) => arrTransform(typedLit(r), row =>
+        aggregate(zip_with(row, v, (a, b) => a * b.cast("double")),
+          lit(0d), (acc, x) => acc + x))
+      case None => v
+    }
+
+  /** The codes of vector `v` (column `vecName` in errors) under `books`,
+    * width-checked and rotated as an engine's corpus is: per subspace, the
+    * nearest codeword by squared L2 with the lowest code on a tie
+    * ([[Quantize.codes]]) — the arithmetic an external engine replays bit
+    * for bit, and the rule the trainer assigns by.
+    */
+  private[search] def encode(v: org.apache.spark.sql.Column, books: Seq[Seq[Seq[Double]]],
+      rotation: Option[Seq[Seq[Double]]], vecName: String): Seq[org.apache.spark.sql.Column] =
+    Quantize.codes(rotated(checked(v, books.size * books.head.head.size, vecName), rotation),
+      books)
+
   /** Codes rows are ~(8 + 4m) bytes; 4M rows ≈ 160 MB broadcast at m=8.
     * Also the cap under which [[IVFPQDenseEngine]] serves queries from a
     * once-per-engine broadcast index. Measured at the cap (4M residual
@@ -487,10 +497,33 @@ case class IVFPQDenseEngine(
     */
   private lazy val fineCorpus: DataFrame =
     if (!residual) corpus
-    else ivf.taggedOwn.join(broadcast(ivf.centroids), Seq("cid"))
+    else ivf.taggedOwn.filter(col("cid").isNotNull)
       .select(col("idx"),
-        zip_with(arrTransform(col("__cv__"), _.cast("double")), col("centroid"),
-          (x, c) => x - c).as("__rv__"))
+        Quantize.residual(col("__cv__"), col("cid"), ivf.centroidSeq).as("__rv__"))
+
+  /** `df` with each row's coarse cell `cid` and PQ codes `__c0..` of its
+    * vector `v` under this engine's quantizers, in one projection: the
+    * tag, residual and encode that [[ivf]]'s `taggedOwn` and [[pq]]'s
+    * `codesOwn` hold for the same vector, with no join between them. With
+    * `residual`, a row whose vector has no cell (null, of another width,
+    * or holding a null) is dropped, as the residual encode drops it.
+    */
+  def quantized(df: DataFrame, v: org.apache.spark.sql.Column): DataFrame = {
+    // pinned state is read as given: touching `pq` would build this
+    // engine's own tagged state, which the fine corpus reads
+    val cents = ivf.centroidSeq
+    val books = fixedCodebooks.getOrElse(pq.codebooks)
+    val rotation = if (fixedRotation.isDefined || !rotate) fixedRotation else pq.rotation
+    val tagged = df.withColumn("cid", Quantize.nearest(v, cents))
+    val fine =
+      if (!residual) tagged.withColumn("__rv__", v)
+      else tagged.filter(col("cid").isNotNull)
+        .withColumn("__rv__", Quantize.residual(v, col("cid"), cents))
+    val vecName = if (residual) "__rv__" else corpusVecCol
+    fine.select(col("*") +: PQDenseEngine.encode(col("__rv__"), books, rotation, vecName)
+      .zipWithIndex.map { case (c, j) => c.as(s"__c$j") }: _*)
+      .drop("__rv__")
+  }
 
   /** Fine quantizer (codebooks + codes), optionally in the rotated basis. */
   lazy val pq: PQDenseEngine = PQDenseEngine(fineCorpus, m, codebookSize,
@@ -640,7 +673,7 @@ case class IVFPQDenseEngine(
       val rows = members.select(col("cid") +: col("idx") +: (0 until m).map(j => col(s"__c$j")): _*)
       val books = pq.codebooks
       val spark = cents.sparkSession
-      val (c, lists) = SearchEngine.serveCollect(this, spark)(
+      val (c, lists) = graft.core.JobLabel(spark, s"$name serve", fingerprint)(
         (cents.collect(), ServeKernels.collectPacked(rows)(IvfPqList.pack(m))))
       val index = IvfPqIndex(c, cents.schema("centroid").dataType,
         IvfPqList.merge(lists.toSeq), books)

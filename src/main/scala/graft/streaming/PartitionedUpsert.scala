@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -116,21 +116,31 @@ object PartitionedUpsert {
     * files untouched on disk.
     *
     * The batch is evaluated once: after the replay and behind-id guards
-    * it is materialized with `localCheckpoint(true)`, and the merge's
-    * reads of the change set (its keys, its duplicate-key verdict, its
-    * upserts) and the staged write all read that one frame. The touched
-    * partitions are observed (`collect_set` of the bucket through an
-    * [[org.apache.spark.sql.Observation]]) in that same checkpoint pass,
-    * so the partition set and the merge read one materialization by
-    * construction and no job of its own computes the set. Without the
-    * checkpoint each consumer re-runs the batch's whole lineage. Not
-    * `persist()`: a cached plan keeps its pre-AQE shuffle partitioning,
-    * while a checkpoint keeps the coalesced partitions AQE chose, so the
-    * staged write's file layout does not change. The current versions
-    * of the touched partitions are read through [[graft.core.StateRead]]
-    * (no schema-inference job), so the commit runs the checkpoint and
-    * the staged write and nothing else. A replayed id returns before any
-    * Spark job.
+    * it is materialized with `localCheckpoint(true)` (job label
+    * `PartitionedUpsert changes`), and every later read of the change
+    * set reads that one frame. Not `persist()`: a cached plan keeps its
+    * pre-AQE shuffle partitioning, while a checkpoint keeps the coalesced
+    * partitions AQE chose. The same pass observes, through an
+    * [[org.apache.spark.sql.Observation]], the touched partitions
+    * (`collect_set` of the bucket, at most n ints) and the row count, so
+    * no job of its own computes either. The current versions of the
+    * touched partitions are read through [[graft.core.StateRead]] (no
+    * schema-inference job).
+    *
+    * The staged write has job label `PartitionedUpsert write`. A change
+    * set of at most [[graft.operators.UpsertMerge.LocalKeyRowCap]] rows
+    * with unique keys, over touched partitions of at most
+    * [[graft.operators.UpsertMerge.LocalBaseRowCap]] rows (their parquet
+    * footers say so, with no job), collects its keys (one job) and merges through
+    * [[graft.operators.UpsertMerge.local]]: each touched partition's kept
+    * rows and its upserts are one task of the write, sorted by key, so the
+    * base side is filtered by the literal keys and never shuffled, and
+    * each touched partition gets one key-ordered file — two jobs in all.
+    * A larger merge, or one with a repeated key, runs
+    * [[graft.operators.UpsertMerge]]'s join plan (a repeated key raises
+    * there) and writes its output partitions as they come, as many files
+    * per touched partition as AQE gives it. A replayed id returns before
+    * any Spark job.
     */
   private[graft] def applyBatch(
       batch: DataFrame,
@@ -148,21 +158,49 @@ object PartitionedUpsert {
         "resume an existing state dir; reuse the original checkpointLocation " +
         "or seed a new stateDir")
     val pc = partCol(keys, m.n)
-    // the touched-partition set is bounded by n — at most n ints ride
-    // the checkpoint job's observed metrics, never data rows
-    val parts = new org.apache.spark.sql.Observation()
-    val changes = batch.observe(parts, collect_set(pc).as("touched"))
-      .localCheckpoint(true)
-    val touched = parts.get("touched").asInstanceOf[scala.collection.Seq[Int]].toSet
-    val curPaths = touched.toSeq.sorted.collect {
-      case i if m.parts.contains(i) => s"$stateDir/p$i/${m.parts(i)}"
+    val fp = graft.core.Fingerprint.combine(stateDir, s"v$id")
+    val observed = new org.apache.spark.sql.Observation()
+    val changes = graft.core.JobLabel(spark, "PartitionedUpsert changes", fp) {
+      batch.observe(observed, collect_set(pc).as("touched"), count(lit(1)).as("rows"))
+        .localCheckpoint(true)
     }
-    val cur =
-      if (curPaths.nonEmpty) graft.core.StateRead(spark, curPaths: _*)
-      else deleteCol.fold(changes)(c => changes.drop(c)).limit(0)
-    val merged = graft.operators.UpsertMerge(cur, changes, keys, deleteCol)
-    val written = stagePartitions(
-      merged.withColumn("__part__", pc), stateDir, s"v$id")
+    val touched = observed.get("touched").asInstanceOf[scala.collection.Seq[Int]].toSet
+    val rows = observed.get("rows").asInstanceOf[Long]
+    def current(parts: Seq[Int]): Option[DataFrame] = {
+      val paths = parts.collect { case i if m.parts.contains(i) => s"$stateDir/p$i/${m.parts(i)}" }
+      if (paths.isEmpty) None else Some(graft.core.StateRead(spark, paths: _*))
+    }
+    val sorted = touched.toSeq.sorted
+    val cur = current(sorted)
+    lazy val empty = cur.getOrElse(deleteCol.fold(changes)(changes.drop)).limit(0)
+    val written = if (touched.isEmpty) Nil else graft.core.JobLabel(spark, "PartitionedUpsert write", fp) {
+      import graft.operators.UpsertMerge.{LocalBaseRowCap, LocalKeyRowCap}
+      val small = rows <= LocalKeyRowCap && cur.forall(c =>
+        graft.core.StateRead.rowCount(c, LocalBaseRowCap).exists(_ <= LocalBaseRowCap))
+      val local =
+        if (!small) None
+        else {
+          val keyRows = changes.select(pc +: keys.map(col): _*).collect().toSeq
+            .groupMap(_.getInt(0))(r => Row.fromSeq(r.toSeq.tail))
+          // each partition's merge is one task of the write: no shuffle
+          val byPart = sorted.map { i =>
+            graft.operators.UpsertMerge.local(current(Seq(i)).getOrElse(empty),
+              changes.filter(pc === i), keys, deleteCol, keyRows.getOrElse(i, Nil))
+              .map { case (kept, upserts) =>
+                kept.unionByName(upserts).withColumn("__part__", pc).coalesce(1)
+              }
+          }
+          if (byPart.exists(_.isEmpty)) None
+          else Some(byPart.flatten.reduce(_.unionByName(_))
+            .sortWithinPartitions(col("__part__") +: keys.map(col): _*))
+        }
+      // the join plan writes its output partitions as they come: many
+      // tasks per touched partition, in parallel
+      val merged = local.getOrElse(
+        graft.operators.UpsertMerge(cur.getOrElse(empty), changes, keys, deleteCol)
+          .withColumn("__part__", pc))
+      stagePartitions(merged, stateDir, s"v$id")
+    }
     // untouched partitions keep their old version entries verbatim; a
     // touched partition with no surviving rows drops out (absent = empty)
     writeManifest(spark, stateDir,

@@ -32,4 +32,15 @@ object ParquetFooterSchema {
       HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
     ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta), converter)
   }
+
+  /** The row count of one parquet file: the sum of its row groups' counts
+    * in the footer, read on the driver.
+    */
+  def rowCount(file: FileStatus, conf: Configuration): Long = {
+    val meta = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.NO_FILTER)
+    var n = 0L
+    meta.getBlocks.forEach(b => n += b.getRowCount)
+    n
+  }
 }

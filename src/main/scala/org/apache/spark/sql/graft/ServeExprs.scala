@@ -51,6 +51,19 @@ object ServeKernels {
   def collectPacked[T: ClassTag](df: DataFrame)(pack: Iterator[InternalRow] => T): Array[T] =
     df.queryExecution.toRdd.mapPartitions(rows => Iterator.single(pack(rows))).collect()
 
+  /** [[collectPacked]] over several frames in one Spark job: `pack` gets
+    * the index of the frame a partition belongs to, and the result holds
+    * the packed partitions of the first frame, then the second's, and so
+    * on.
+    */
+  def collectPackedAll[T: ClassTag](dfs: DataFrame*)(
+      pack: (Int, Iterator[InternalRow]) => T): Array[T] = {
+    val rdds = dfs.map(_.queryExecution.toRdd)
+    val frameOf = rdds.zipWithIndex.flatMap { case (r, i) => Seq.fill(r.getNumPartitions)(i) }.toArray
+    rdds.head.sparkContext.union(rdds)
+      .mapPartitionsWithIndex((p, rows) => Iterator.single(pack(frameOf(p), rows))).collect()
+  }
+
   /** Boxed Java source of a generated value, for `Object[]` argument lists. */
   private[graft] def boxed(g: ExprCode, t: DataType): String =
     if (CodeGenerator.isPrimitiveType(t)) s"${CodeGenerator.boxedType(t)}.valueOf(${g.value})"

@@ -59,6 +59,31 @@ private object VecUtil {
       case None => TypeCheckResult.TypeCheckSuccess
     }
 
+  /** FNV-1a over the shape and the bit patterns of a literal table: what
+    * a kernel holding the table renders and compares in plans, so two
+    * kernels over different tables never alias in a plan fingerprint.
+    */
+  def tableFp(rows: Array[Array[Double]]): Long = {
+    var h = 0xcbf29ce484222325L
+    def mix(v: Long): Unit = h = (h ^ v) * 0x100000001b3L
+    mix(rows.length.toLong)
+    rows.foreach { r =>
+      mix(r.length.toLong)
+      r.foreach(d => mix(java.lang.Double.doubleToRawLongBits(d)))
+    }
+    h
+  }
+
+  /** Equal bit patterns, row by row; the shared array (a plan's copies of
+    * one kernel) answers without a scan.
+    */
+  def sameTable(a: Array[Array[Double]], b: Array[Array[Double]]): Boolean =
+    (a eq b) || a.length == b.length && a.indices.forall { i =>
+      val (x, y) = (a(i), b(i))
+      x.length == y.length && x.indices.forall(j =>
+        java.lang.Double.doubleToRawLongBits(x(j)) == java.lang.Double.doubleToRawLongBits(y(j)))
+    }
+
   /** A double array as Spark array data: unsafe (no boxing) when no slot
     * is null.
     */
@@ -153,12 +178,22 @@ case class SquaredDistsExpr(child: Expression, centroids: Array[Array[Double]])
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def nullable: Boolean = false
   override def prettyName: String = "squared_dists"
-  override def stringArgs: Iterator[Any] =
-    Iterator(child, centroids.length, centroids.head.length)
 
   @transient private lazy val childIsFloat =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
   private val dim = centroids.head.length
+
+  // plans render and compare the centroid table by content (as
+  // BloomProbeExpr does its bitmap), never by the array's identity
+  @transient private lazy val tableFp = VecUtil.tableFp(centroids)
+  override def flatArguments: Iterator[Any] =
+    Iterator(child, centroids.length, dim, f"fp=$tableFp%016x")
+  override def stringArgs: Iterator[Any] = flatArguments
+  override def equals(o: Any): Boolean = o match {
+    case e: SquaredDistsExpr => child == e.child && VecUtil.sameTable(centroids, e.centroids)
+    case _ => false
+  }
+  override def hashCode(): Int = (child, tableFp).hashCode
 
   def dists(v: ArrayData): ArrayData = {
     val k = centroids.length
@@ -203,6 +238,53 @@ case class SquaredDistsExpr(child: Expression, centroids: Array[Array[Double]])
 
   override protected def withNewChildInternal(newChild: Expression): SquaredDistsExpr =
     copy(child = newChild)
+}
+
+/** Element-wise `left − right` of two double arrays — the codegen'd twin
+  * of `zip_with(left, right, (x, y) => x - y)` (the IVF-PQ residual
+  * `x − centroid`). Parity:
+  *   - a null `left` or `right` → null;
+  *   - the result is as long as the longer input; a slot past the end of
+  *     the shorter one, or null in either, is null (zip_with pads with
+  *     null);
+  *   - every other slot is the same IEEE subtraction.
+  */
+case class VecSubExpr(left: Expression, right: Expression) extends BinaryExpression {
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
+  override def prettyName: String = "vec_sub"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (children.forall(_.dataType.isInstanceOf[ArrayType]) &&
+        children.forall(VecUtil.elementType(_) == DoubleType)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName needs two arrays of double, got ${children.map(_.dataType.simpleString)}")
+
+  def sub(a: ArrayData, b: ArrayData): ArrayData = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    val n = math.max(na, nb)
+    val out = new Array[Double](n)
+    val isNull = new Array[Boolean](n)
+    var i = 0
+    while (i < n) {
+      if (i >= na || i >= nb || a.isNullAt(i) || b.isNullAt(i)) isNull(i) = true
+      else out(i) = a.getDouble(i) - b.getDouble(i)
+      i += 1
+    }
+    VecUtil.doubles(out, isNull)
+  }
+
+  override def nullSafeEval(x: Any, y: Any): Any =
+    sub(x.asInstanceOf[ArrayData], y.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("vecSubExpr", this, classOf[VecSubExpr].getName)
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = $ref.sub($a, $b);")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): VecSubExpr =
+    copy(left = newLeft, right = newRight)
 }
 
 /** 64-bit SimHash fold over a per-token hash array — the codegen'd twin
@@ -340,8 +422,18 @@ case class AdcTableExpr(child: Expression, book: Array[Array[Double]], offset: I
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def nullable: Boolean = false
   override def prettyName: String = "adc_table"
-  override def stringArgs: Iterator[Any] =
-    Iterator(child, book.length, book.head.length, offset)
+
+  // the codebook by content, as SquaredDistsExpr renders its centroids
+  @transient private lazy val tableFp = VecUtil.tableFp(book)
+  override def flatArguments: Iterator[Any] =
+    Iterator(child, book.length, book.head.length, offset, f"fp=$tableFp%016x")
+  override def stringArgs: Iterator[Any] = flatArguments
+  override def equals(o: Any): Boolean = o match {
+    case e: AdcTableExpr =>
+      child == e.child && offset == e.offset && VecUtil.sameTable(book, e.book)
+    case _ => false
+  }
+  override def hashCode(): Int = (child, offset, tableFp).hashCode
 
   override def checkInputDataTypes(): TypeCheckResult =
     VecUtil.numericArrays(prettyName, children)

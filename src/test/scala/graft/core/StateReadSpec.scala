@@ -48,6 +48,19 @@ class StateReadSpec extends SparkSpec {
     assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
   }
 
+  test("rowCount sums the footers with no job, and stops once the sum passes the limit") {
+    val dir = Files.createTempDirectory("graft-state-count").toString
+    // four files of 25 rows each
+    spark.range(100).repartition(4).write.parquet(s"$dir/t")
+    val df = StateRead(spark, s"$dir/t")
+    val (all, jobs) = graft.Jobs.during(spark)(StateRead.rowCount(df))
+    assert(all.contains(100L) && jobs.isEmpty, s"$all $jobs")
+    // the first file read passes 10: its 25 rows, not the whole sum
+    assert(StateRead.rowCount(df, limit = 10).contains(25L))
+    assert(StateRead.rowCount(df, limit = 99).contains(100L))
+    assert(StateRead.rowCount(df.filter(col("id") > 5)).isEmpty)
+  }
+
   /** Inferring reads under `graft/core` and `graft/streaming` that do not
     * read graft-written state: file → the read's argument.
     */

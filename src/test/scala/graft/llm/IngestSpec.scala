@@ -128,10 +128,20 @@ class IngestSpec extends SparkSpec {
     val batch = arrivals.filter(col("doc_id") % 2 === 1).localCheckpoint(true)
     val (_, jobs) = graft.Jobs.during(spark)(
       IngestPreset.run(batch, corpus, dir, cache, "fpF", "fpF:b1", batchId = 1L))
-    // measured at 28 (the commit's AQE stages vary by one): every cache
-    // hit, the table reads and the touched-partition set run no job
-    assert(jobs.size <= 29, jobs.mkString("\n"))
-    assert(jobs.forall(_.sql.isDefined), jobs.mkString("\n"))
+    // every job runs under the label of its eager call site: cache hits,
+    // table reads and the touched-partition set run none
+    val bySite = jobs.groupMapReduce(_.site.getOrElse("(no label)"))(_ => 1)(_ + _)
+    val budget = Map(
+      "IngestPreset clean" -> 2, // the cleaner's line dedup shuffles once
+      "IncrementalMinHashDedupPipe batch" -> 1,
+      "IncrementalMinHashDedupPipe corpus" -> 1,
+      "CachedStage write" -> 1, // the batch's embeddings
+      "PartitionedUpsert changes" -> 2, // the embeddings join broadcasts
+      "PartitionedUpsert write" -> 2) // the change keys, then the write
+    val report = bySite.toSeq.sorted.mkString("\n") + "\n" + jobs.mkString("\n")
+    assert(bySite.keySet.subsetOf(budget.keySet), report)
+    budget.foreach { case (site, n) => assert(bySite.getOrElse(site, 0) <= n, report) }
+    assert(jobs.size <= 12, report)
   }
 
   test("run: the raw batch is evaluated once; a replayed id stays lazy") {
@@ -150,8 +160,11 @@ class IngestSpec extends SparkSpec {
     res.unique.count()
     assert(passes.value == rows)
     passes.reset()
-    val replay = IngestPreset.run(raw, corpus, dir, cache, "fpE", "fpE:b0")
-    // the batch-side dedup signatures are the replay's only pass
+    val (replay, replayJobs) = graft.Jobs.during(spark)(
+      IngestPreset.run(raw, corpus, dir, cache, "fpE", "fpE:b0"))
+    // the batch-side dedup signatures are the replay's only pass: no
+    // served-dedup collect, no checkpoint, no commit
+    assert(replayJobs.forall(_.site.isEmpty), replayJobs.mkString("\n"))
     val replayPasses = passes.value
     assert(replayPasses <= rows)
     replay.unique.count()

@@ -5,8 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{transform => arrTransform, _}
 
-/** The higher-order-function and window forms the query path's codegen
-  * kernels replaced, kept as the oracles the kernels must match bit for
+/** The higher-order-function and window forms the query and build paths'
+  * codegen kernels replaced, kept as the oracles the kernels must match bit for
   * bit (and the forms the DuckDB gate oracles replay), with the helpers
   * the parity specs compare through.
   */
@@ -37,6 +37,26 @@ object HofForms {
   /** One ADC table: `v[offset, offset + dsub)` dotted with each codeword. */
   def adcTable(v: Column, book: Seq[Seq[Double]], offset: Int): Column =
     arrTransform(typedLit(book), c => dot(slice(v, offset + 1, book.head.size), c))
+
+  /** The IVF tag: argmin of the squared L2 distances to each centroid,
+    * lowest index on a tie (`Dense.scala`'s former build step).
+    */
+  def nearest(v: Column, cents: Seq[Seq[Double]]): Column = {
+    val d = arrTransform(typedLit(cents), c =>
+      aggregate(zip_with(arrTransform(v, _.cast("double")), c, (x, y) => (x - y) * (x - y)),
+        lit(0d), (acc, x) => acc + x))
+    (array_position(d, array_min(d)) - 1).cast("int")
+  }
+
+  /** The PQ encode: per book, [[nearest]] over the slice the book covers. */
+  def codes(v: Column, books: Seq[Seq[Seq[Double]]]): Seq[Column] = {
+    val dsub = books.head.head.size
+    books.zipWithIndex.map { case (b, j) => nearest(slice(v, j * dsub + 1, dsub), b) }
+  }
+
+  /** The IVF-PQ residual `x − centroid`, element-wise. */
+  def residual(v: Column, centroid: Column): Column =
+    zip_with(arrTransform(v, _.cast("double")), centroid, (x, c) => x - c)
 
   def rrf(sides: Seq[Column], rrfK: Double): (Column, Column) = {
     val contribs = sides.map { idx =>

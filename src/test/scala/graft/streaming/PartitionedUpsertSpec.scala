@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, functions}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
@@ -173,10 +174,93 @@ class PartitionedUpsertSpec extends SparkSpec {
     val (_, jobs) = graft.Jobs.during(spark)(
       PartitionedUpsert.applyBatch(changes, 0, s"$dir/t", Seq("k"), None))
     // every job belongs to the change checkpoint or the staged write
-    val sites = jobs.map(_.sql.map(_.replaceAll(":\\d+$", "")))
-    assert(sites.distinct.sorted == Seq(Some("localCheckpoint at PartitionedUpsert.scala"),
-      Some("parquet at PartitionedUpsert.scala")), jobs)
+    val sites = jobs.map(_.site)
+    assert(sites.distinct.sorted == Seq(Some("PartitionedUpsert changes"),
+      Some("PartitionedUpsert write")), jobs)
     assert(PartitionedUpsert.latest(spark, s"$dir/t").get.count() == 65)
+  }
+
+  private val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+
+  /** The executed plans of `applyBatch(changes)` on `dir/t`. */
+  private def commitPlans(dir: String, changes: DataFrame, deleteCol: Option[String])
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      PartitionedUpsert.applyBatch(changes, 0, s"$dir/t", Seq("k"), deleteCol)
+      org.apache.spark.sql.graft.ListenerDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val all = plans.asScala.toSeq
+    assert(all.exists(p => helper.collect(p) { case s: FileSourceScanExec => s }.nonEmpty))
+    all
+  }
+
+  /** The shuffles in `plans` with a scan of the table's partition dirs below. */
+  private def baseShuffles(plans: Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    plans.flatMap(p => helper.collect(p) {
+      case e: ShuffleExchangeLike if helper.collect(e) {
+        case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.toString.contains("/t/p")) => s
+      }.nonEmpty => e
+    })
+  }
+
+  /** The anti-joins in `plans`: [[graft.operators.UpsertMerge]]'s join plan. */
+  private def antiJoins(plans: Seq[org.apache.spark.sql.execution.SparkPlan]) =
+    plans.flatMap(p => helper.collect(p) {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec
+          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j
+    })
+
+  test("applyBatch never shuffles the table; it writes one key-ordered file per touched partition") {
+    val dir = java.nio.file.Files.createTempDirectory("pups-plan").toString
+    // the seed writes several unordered files per partition
+    val base = spark.range(0, 400, 1, 8).select(($"id" * 7919 % 400).as("k"), ($"id" * 1.0).as("v"))
+    PartitionedUpsert.seed(base, s"$dir/t", Seq("k"), n = 4)
+    val changes = Seq((3L, 30.5, false), (9L, 0.0, true), (401L, 4.0, false), (77L, 7.0, false))
+      .toDF("k", "v", "del")
+    val plans = commitPlans(dir, changes, Some("del"))
+    assert(baseShuffles(plans).isEmpty && antiJoins(plans).isEmpty, plans.mkString("\n"))
+    val m = PartitionedUpsert.readManifest(spark, s"$dir/t").get
+    m.parts.collect { case (i, "v0") => i }.foreach { i =>
+      val files = new java.io.File(s"$dir/t/p$i/v0").listFiles()
+        .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      assert(files.length == 1, s"p$i: ${files.toSeq}")
+      val keys = spark.read.parquet(files.head.getPath).as[(Long, Double)].collect().map(_._1).toSeq
+      assert(keys == keys.sorted, s"p$i")
+    }
+    val got = PartitionedUpsert.latest(spark, s"$dir/t").get.as[(Long, Double)].collect().toMap
+    assert(got.size == 400 && got(3L) == 30.5 && got(77L) == 7.0 && !got.contains(9L) && got(401L) == 4.0)
+  }
+
+  test("above either local cap applyBatch merges through the join plan, with the same rows") {
+    import graft.operators.UpsertMerge.{LocalBaseRowCap, LocalKeyRowCap}
+    def run(baseRows: Long, changeRows: Long): Unit = {
+      val dir = java.nio.file.Files.createTempDirectory("pups-join").toString
+      PartitionedUpsert.seed(spark.range(0, baseRows, 1, 4).select($"id".as("k"), ($"id" * 1.0).as("v")),
+        s"$dir/t", Seq("k"), n = 2)
+      // updates of the first keys, one delete, inserts after the base
+      val changes = spark.range(0, changeRows, 1, 2).select(
+        functions.when($"id" % 2 === 0, $"id").otherwise($"id" + baseRows).as("k"), functions.lit(-1.0).as("v"),
+        ($"id" === 2).as("del"))
+      val plans = commitPlans(dir, changes, Some("del"))
+      assert(antiJoins(plans).nonEmpty, plans.mkString("\n"))
+      val got = PartitionedUpsert.latest(spark, s"$dir/t").get.as[(Long, Double)].collect().toMap
+      val changed = (0L until changeRows).map(i => if (i % 2 == 0) i else i + baseRows).toSet
+      assert(got.size == baseRows + changeRows / 2 - 1 && !got.contains(2L))
+      assert(got.forall { case (k, v) => v == (if (changed(k)) -1.0 else k.toDouble) })
+    }
+    run(LocalBaseRowCap + 1, 10)
+    run(1000, LocalKeyRowCap + 1)
   }
 
   test("seedFromFlat migrates a flat state dir: identical reads, resumable stream") {
